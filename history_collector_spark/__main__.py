@@ -11,7 +11,7 @@ doorway for the Spark engine:
     explain NAME [--sf-dir D] print the formatted physical plan
     parity NAME [--sf-dir D]  run query + oracle, assert driver-hash
                               parity (round-6-then-exact; PARITY.md)
-    ingest --landing D --out D --checkpoint D [--poll]
+    ingest --landing D --out D --checkpoint D --kin-issuer HEX [--poll]
                               run the exactly-once file-stream ingest
 
 Everything routes through the same registry / session factory the
@@ -52,6 +52,11 @@ def _build_parser() -> argparse.ArgumentParser:
     i.add_argument("--landing", required=True)
     i.add_argument("--checkpoint", required=True)
     i.add_argument("--out", required=True)
+    i.add_argument(
+        "--kin-issuer",
+        required=True,
+        help="KIN asset issuer, lowercase hex of its ed25519 key",
+    )
     i.add_argument(
         "--poll",
         action="store_true",
@@ -132,7 +137,10 @@ def main(argv: list[str] | None = None) -> int:
         from history_collector_spark.sinks.exactly_once import (
             ExactlyOnceDualSink,
         )
-        from history_collector_spark.streaming.ingest import start_ingest
+        from history_collector_spark.streaming.ingest import (
+            kin_operations,
+            start_ingest,
+        )
 
         spark = get_spark(app_name="hcs-cli-ingest")
         sink = ExactlyOnceDualSink(args.out)
@@ -142,6 +150,7 @@ def main(argv: list[str] | None = None) -> int:
             checkpoint_dir=args.checkpoint,
             batch_fn=sink.write_batch,
             available_now=not args.poll,
+            transform=lambda entries: kin_operations(entries, args.kin_issuer),
         )
         q.awaitTermination()
         return 0

@@ -56,184 +56,12 @@ _LOADED = False
 
 
 # The external driver's correctness gate samples the FIRST 50 registered
-# queries, so registration order decides which operator families get the
-# hard per-round oracle signal. The visible 50 is EXPLICIT — a balanced
-# cut: every SURVEY §2 core row (relational/joins/explodes/scalars/
-# ingest parity), the streaming e2e family incl. the JDBC exactly-once
-# dataflow, the dedup ladder (exact -> LSH -> verify -> clusters ->
-# span/segment/edit-distance), ANN + clustering, text/BPE, curation
-# flagships, the star-schema join, and multimodal. Everything else
-# keeps full local oracle coverage in tests/test_correctness.py.
-# Round-5 rotation (verdict item 5): eight long-stable rows — green
-# since round 1 and still locally oracle-verified every run — ceded
-# their driver slots to never-driver-sampled families (salted two-phase
-# agg, linear interpolation, Bloom audit, LM perplexity, global-id
-# assignment) and the three new optimizer-stress TPC-H shapes
-# (Q19 disjunctive pushdown, Q21 multi-semi/anti, Q22 anti+scalar).
-# Rotated out: count_filtered, top1_latest, typetag_asset_filter,
-# coalesce_override, conditional_status, explode_resultset,
-# streaming_window_counts, multimodal_metadata, and mid-round also
-# distinct_count / topn_per_group / text_quality_score (stable since
-# round 1) for streaming_late_drop_e2e / embedding_covariance /
-# retrieval_mmr_rerank.
-# Round-6 rotation (verdict item 4): eight more never-driver-sampled
-# round-5 flagships — the three heaviest TPC-H optimizer shapes
-# (Q7 two-sided nation filter, Q8 market-share ratio, Q9 multi-dim
-# broadcast star), streaming upsert + stream-stream outer join, DQ
-# expectations, and both 100TB-serving ANN shapes (zero-exchange
-# bucketed probe, O(delta) index refresh) — replace eight rows green
-# since round 1 (appid_memo_filter, payments_projection,
-# fanout_union_type, broadcast_lookup_time, zip_join_oppairs,
-# explode_txset, scalar_pack, group_agg_pricing). Every retired row
-# stays locally oracle-verified each run; event_linear_interpolate
-# deliberately STAYS in the window to prove the r5 hash fix, and the
-# round-6 PNG codec roundtrip takes point_lookup's slot (Q2 remains
-# locally verified; account_history keeps the reference-sample-query
-# flag in the window). Late-round swap: three round-6 flagships built
-# after the first rotation — the CDC->SCD2 streaming merge, the PQ-ADC
-# serving probe, and the GIF codec roundtrip — replace the long-stable
-# asof_join_last_signup / dedup_edit_distance / interval_coverage rows.
-# Round-8 rotation (verdict item 3): twelve never-driver-sampled rows
-# replace long-green ones — this round's seven scale rewrites
-# (migration matrix + curriculum phases on broadcast percentile_disc
-# cutoffs, weighted median / gini / RRF on the two-phase range-rank
-# helpers, cluster representative as a max-struct agg, the xxhash64-
-# trimmed contamination join), the VAD signed-PCM fix, plus
-# chi-squared independence, Kaplan-Meier retention, TPC-H Q3, and the
-# aHash fingerprint. Retired (all stay locally oracle-verified every
-# run): event_linear_interpolate (fix proven green r6+r7),
-# Q8/Q9 (Q7 keeps the family's seat), bloom audit, three dedup/ANN
-# siblings whose family heads remain, MMR (RRF takes the retrieval
-# seat), embedding_covariance, heavy hitters, kmeans assignment step.
-# Late round 8: the three queries ADDED this round rotate in
-# (baseline-JPEG roundtrip, Gopher repetition panel, encoding-artifact
-# audit); retired in exchange are ngram-Jaccard + GIF + ANN-recall,
-# each a sibling whose family head keeps its seat (minhash_lsh /
-# decode_png + decode_real / ivf_bucketed_probe + pq_adc).
-# Late round 8 (second wave): five freshly-built flagships —
-# Bradley-Terry ratings, DSIR selection, CCNet perplexity buckets,
-# the unigram Viterbi tokenizer, and DoReMi domain reweighting —
-# take the seats of five long-green r7 rows whose families keep
-# representation (assign_global_ids, streaming outer-join + late-drop
-# (7 streaming seats remain), exact-substring dedup (4 dedup seats
-# remain), TPC-H Q22 (Q3/Q7/Q19/Q21 remain)).
-# Late round 8 (third wave): the eight metric/eval flagships built
-# this session — tie-corrected AUC, conformal coverage, ROUGE-L
-# (unrolled LCS), chrF2, corpus BLEU, the exact fixed-point logistic
-# step, from-scratch HLL, and the CUPED readout — replace eight
-# long-green rows whose families keep seats: salted_two_phase_agg
-# (r5), streaming_ewma_e2e + streaming_upsert_e2e (6 streaming seats
-# remain), tpch_q21 (Q7/Q19 remain), range_join_events (r1-green),
-# dq_expectations_report (curation_quality_pipeline keeps quality),
-# ann_index_delta_merge (probe + PQ-ADC keep ANN), bpe_merge_step
-# (the Viterbi tokenizer keeps the seat). All retired rows stay
-# locally oracle-verified every run.
-# Late round 8 (fourth wave): the streaming HLL merge (bit-exact
-# mergeable-sketch contract), Holt linear smoothing, and greedy
-# WordPiece regret rotate in for curation_decontaminate
-# (cross_source_contamination keeps the contamination seat; 6
-# curation seats remain), text_perplexity_lm (curation_perplexity_
-# buckets keeps the LM subtree), and dedup_clusters
-# (cluster_representative + minhash_lsh keep dedup's 3 other seats).
-# Late round 8 (fifth wave): the KS test (two-phase range-rank CDF),
-# Wyllie pointer jumping, and the dynamic-partition-pruning join
-# rotate in for curation_token_budget_plan (5 curation seats remain),
-# label_noise_knn (IVF-probe + PQ-ADC keep the ANN/kNN seats), and
-# streaming_page_hinkley_e2e (6 streaming seats remain).
-# Round 9 (first wave): 12 never-driver-sampled queries rotate in
-# (183 names had never appeared in any r1-r8 window — VERDICT r8
-# "What's missing" #4): TPC-H Q4/Q14/Q15 shapes, sessionization,
-# SCD2 batch history, BM25 retrieval, bootstrap AUC CI, embedding
-# covariance + Matryoshka audits, water-filling quotas, PageRank
-# over the dup graph, and CUSUM changepoints. Retired seats all
-# keep family representation (xdr_triplet_parity + pipeline_parity
-# keep sources; Q19 keeps TPC-H alongside the three new shapes;
-# ks_test/chi2/cuped keep stats; rouge/bleu/gopher keep text;
-# streaming_hll_merge_e2e keeps sketches; dsir/domain_reweight/
-# curriculum/encoding/quality keep curation's 5 seats; png/jpeg/
-# real/vad keep multimodal) and stay locally oracle-verified on
-# every pytest/driver-sim run. The new streaming near-dup e2e (LSH
-# vs static index + in-stream bucket state, the round-9 capability
-# item) supersedes streaming_dedup_e2e's seat — exact-key stream
-# dedup stays locally verified; 6 streaming seats remain.
-# Round 9 (second wave): the two queries BUILT this round rotate in —
-# the IVF nprobe tuning sweep (exact-integer list ranking) takes
-# experiment_cuped_adjusted's seat (ks_test + chi2 keep stats) and
-# the decode-yield scorecard takes ml_logreg_step's (the eval family
-# keeps auc/conformal/bootstrap seats); both retirees stay locally
-# oracle-verified every run. Third wave: the five-stage composed
-# curation pipeline (quality -> exact -> near-dup -> decontaminate ->
-# budget funnel, curation_end_to_end) takes curation_quality_pipeline's
-# seat (the quality family keeps encoding_audit + the funnel itself),
-# and the streaming ANN probe e2e (micro-batched queries vs the static
-# bucketed IVF index) takes user_retention_kaplan_meier's (stats keeps
-# ks/chi2/bootstrap-CI seats; 7 streaming seats now). Fourth wave: the
-# WARC container ingest (from-scratch ISO 28500 framing, multi-member
-# gzip) takes tpch_q19_disjunctive's seat (Q4/Q14/Q15 keep TPC-H);
-# its USTAR twin stays locally verified. Fifth wave: the STREAMING
-# WARC ingest e2e (shards land over time, per-batch parse, equal to
-# the batch read) takes curation_encoding_audit's seat (curation
-# keeps dsir/domain_reweight/curriculum/quota/end_to_end).
-# Round-10 rotation (VERDICT r9 item 1: 174/325 queries had never
-# appeared in ANY r1-r9 driver window): 14 never-driver-sampled rows
-# rotate in — three fresh TPC-H optimizer shapes (Q12 ship-mode
-# two-class CASE agg, Q16 anti-join + count-distinct variety, Q20
-# dominant-supplier nested-agg semi-join), the USTAR container ingest
-# (its WARC twin keeps the container seat it won in r9), boilerplate
-# prefix-template detection, mel filterbank energies, two streaming
-# e2e shapes (session-window agg, stream-stream interval join), OHLC
-# bars, funnel conversion, VARIANT stats, Kneser-Ney bigrams, the
-# salted-skew-join enrich demo, and the Benford first-digit audit.
-# Retired seats all keep family representation (decode_real +
-# decode_yield + vad + mel keep multimodal; q4 keeps TPC-H's old
-# guard alongside the three new shapes; conformal + bootstrap keep
-# eval; chi2 keeps stats; bleu + bm25 keep text metrics; dsir +
-# domain_reweight + quota + end_to_end keep curation;
-# streaming_scd2_cdc keeps SCD2; sessionize-e2e takes the
-# sessionization seat from the batch form) and stay locally
-# oracle-verified on every pytest/driver-sim run.
-# Round-11 rotation (VERDICT r10 item 1: 165/350 queries had never
-# appeared in ANY r1-r10 driver window; the tripwire demands >=10
-# fresh names): 13 never-driver-sampled rows rotate in — the CUBE
-# grouping-sets agg, cohort retention triangles, CDC last-write-wins
-# dedup, PII redaction, Count-Min frequency audit vs exact counts,
-# the multi-format container digest, bootstrap mean CI, PQ codebook
-# assignment, containment (asymmetric Jaccard) dedup, the syllable-
-# complexity readability panel, the pairwise win-rate league table,
-# MRR/recall@k, and per-group deterministic bottom-k sampling.
-# Retired seats all keep family representation (Q20 keeps TPC-H;
-# yield/webp/wav/tiff keep multimodal; neardup-e2e + containment keep
-# dedup/LSH; mcnemar/fleiss/win-rate/mrr/preference keep eval;
-# warc-e2e + multiformat keep containers; shapley keeps events;
-# chat-pack/end_to_end/web/pii keep curation) and stay locally
-# oracle-verified on every pytest/driver-sim run.
+# queries, so registration order decides which operator families get its
+# oracle signal. The window is this explicit list (order matters; see
+# tests/test_round6.py::test_driver_window_hygiene). Every query outside
+# it keeps full local oracle coverage in tests/test_correctness.py; the
+# per-round rotation history lives in git.
 PRIORITY_QUERIES = (
-    # Round-15 rotation (VERDICT r14 item 1: 111/373 queries had never
-    # appeared in ANY r1-r14 driver window; clearing the backlog by
-    # round 20 needs >=19 fresh names per round): 22 never-driver-
-    # sampled rows rotate in. Retired seats (all driver-green r14)
-    # keep family representation: tpch_q18 keeps TPC-H (q17 out);
-    # ingest/jdbc/gapless/interval-join + the new static-join e2e keep
-    # streaming (sessionize/page-hinkley/frontier-e2e out); zstd-dict/
-    # bzip2/zip/xz/warc-http keep containers (pdf out); robots +
-    # frontier-assign keep crawl (outlinks out); yield + tone-energy
-    # keep multimodal (anim/gif-anim out); chat-pack + web-end-to-end
-    # + the new filter-funnel/DSIR seats keep curation (bottom-k out);
-    # kmeans-train + the new silhouette seat keep clustering;
-    # dim-health/feature-hash keep embeddings (quantize/random-
-    # projection/standardize/norm-audit out, all driver-verified r14);
-    # ivf-topk + the new hard-negative seat keep ANN (nprobe out);
-    # minhash-calibration + the new split-leakage seat keep dedup
-    # (fingerprint out); bm25 + char-entropy keep text (compression-
-    # quality out, fixed+verified r14); wordpiece keeps tokenizers
-    # (fertility out); rowgroup-pruning + snapshot-diff keep
-    # maintenance (compact/zorder out); er_entity_cluster_census takes
-    # the entity-resolution seat from er_blocked_match_audit;
-    # incremental_agg_merge takes the sketch seat from
-    # incremental_sketch_merge; k-anonymity + dp-count + the new
-    # average-precision seat keep eval/privacy. Every retired name
-    # stays locally oracle-verified on every pytest/driver-sim run.
-    #
     # --- kept anchors (28) ---
     "account_history",
     "tpch_q18_large_orders",

@@ -8,14 +8,22 @@ writes data then a completion marker then last_file, with rollback
 deleting partial objects (python/adapters/s3_storage_adapter.py:64-108).
 
 Spark translation: an idempotent ``foreachBatch`` writer. Each batch
-(keyed by its monotonically increasing batch/epoch id) writes both
-tables into epoch-scoped partition directories with dynamic partition
-overwrite — a replay of the same epoch overwrites its own output
-instead of duplicating it — and then commits the `lastfile` marker.
-Ordering guarantees: data first, marker last, so a crash between the
-two leaves a re-runnable epoch, never a committed-but-missing one
-(readers trust the marker, mirroring the reference's completion-marker
-design).
+(keyed by its monotonically increasing batch/epoch id) is ONE Spark
+write, partitioned by the row's `type` tag and the epoch, with dynamic
+partition overwrite — both tables land in one job commit, and a replay
+of the same epoch overwrites its own partitions instead of duplicating
+them. On-disk layout::
+
+    <base>/type=payment/epoch_id=N/part-*     (payments_dir)
+    <base>/type=creation/epoch_id=N/part-*    (creations_dir)
+    <base>/last_file                          (the checkpoint marker)
+
+A side with no rows in an epoch writes no partition. Reading
+`payments_dir` or `creations_dir` gives the data columns plus
+`epoch_id`. Ordering guarantees: data first, marker last, so a crash
+between the two leaves a re-runnable epoch, never a committed-but-
+missing one (readers trust the marker, mirroring the reference's
+completion-marker design).
 """
 
 from __future__ import annotations
@@ -35,8 +43,8 @@ class ExactlyOnceDualSink:
     def __init__(self, base_dir: str, fmt: str = "parquet"):
         self.base_dir = base_dir
         self.fmt = fmt
-        self.payments_dir = os.path.join(base_dir, "payments")
-        self.creations_dir = os.path.join(base_dir, "creations")
+        self.payments_dir = os.path.join(base_dir, "type=payment")
+        self.creations_dir = os.path.join(base_dir, "type=creation")
         self.marker_path = os.path.join(base_dir, "last_file")
 
     # -- checkpoint (S8) ----------------------------------------------------
@@ -59,9 +67,12 @@ class ExactlyOnceDualSink:
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Idempotent: replaying an epoch rewrites its own partitions.
 
-        `batch_df` carries the unioned `type`-tagged rows (E4); the two
-        tables split here, mirroring save(payments, creations, file)
-        (python/adapters/hc_storage_adapter.py:47-59).
+        `batch_df` carries the unioned `type`-tagged rows (E4); one
+        partitioned write splits them into the two tables, mirroring
+        save(payments, creations, file)
+        (python/adapters/hc_storage_adapter.py:47-59). An empty batch
+        writes no partition but still advances the checkpoint
+        (python/tests/test_postgres_storage_adapter.py:230-251).
         """
         committed = self.last_committed()
         if committed is not None and epoch_id <= committed:
@@ -69,26 +80,15 @@ class ExactlyOnceDualSink:
 
         from pyspark.sql import functions as F
 
-        tagged = batch_df.withColumn("epoch_id", F.lit(epoch_id))
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-        for kind, out_dir in (
-            ("payment", self.payments_dir),
-            ("creation", self.creations_dir),
-        ):
-            rows = tagged.filter(F.col("type") == kind).drop("type")
-            # empty batches still advance the checkpoint but write no
-            # files (python/tests/test_postgres_storage_adapter.py:230-251)
-            if rows.isEmpty():
-                continue
-            (
-                rows.write.mode("overwrite")
-                .partitionBy("epoch_id")
-                .format(self.fmt)
-                .save(out_dir)
-            )
-
+        (
+            batch_df.filter(F.col("type").isin("payment", "creation"))
+            .withColumn("epoch_id", F.lit(epoch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("type", "epoch_id")
+            .format(self.fmt)
+            .save(self.base_dir)
+        )
         self._commit(epoch_id)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:

@@ -83,6 +83,49 @@ def read_archive_stream(
     return files.mapInPandas(decode, schema=ENTRY_SCHEMA)
 
 
+# memo app-id tag `1-<app>-...`; `[A-z]` kept from python/main.py:57-58
+APP_ID_MEMO = r"^1-([A-z0-9]{4})-"
+
+
+def kin_operations(entries: DataFrame, kin_issuer: str) -> DataFrame:
+    """The ETL step between decode and sink (python/main.py:142-199):
+    explode decoded ledgers into one row per operation and keep KIN
+    payments from `kin_issuer` plus account creations, both only from
+    transactions whose memo carries an app id. Each row is tagged with
+    the `type` column ExactlyOnceDualSink splits on.
+
+    `kin_issuer` is the issuer as the decoder emits it: lowercase hex of
+    the ed25519 key for the binary XDR codec."""
+    txs = entries.select("ledger_seq", F.explode("txs").alias("tx"))
+    ops = txs.select(
+        "ledger_seq", "tx", F.posexplode("tx.operations").alias("op_index", "op")
+    )
+    op = F.col("op")
+    is_payment = (
+        (op["type"] == 1)
+        & (op["asset"]["assetCode"] == "KIN")
+        & (op["asset"]["issuer"] == kin_issuer)
+    )
+    app_id = F.regexp_extract("tx.memo", APP_ID_MEMO, 1)
+    return ops.filter((is_payment | (op["type"] == 0)) & (app_id != "")).select(
+        F.when(op["type"] == 1, "payment").otherwise("creation").alias("type"),
+        "ledger_seq",
+        F.col("tx.hash").alias("hash"),
+        # per-op source override, else the tx source (python/main.py:173-176)
+        F.coalesce(
+            F.try_element_at(op["sourceAccount"], F.lit(1)), F.col("tx.source")
+        ).alias("source"),
+        op["destination"].alias("destination"),
+        F.when(op["type"] == 1, op["amount"])
+        .otherwise(op["starting_balance"])
+        .alias("amount"),
+        F.col("tx.memo").alias("memo"),
+        app_id.alias("app_id"),
+        F.col("tx.fee").alias("fee"),
+        "op_index",
+    )
+
+
 def start_ingest(
     spark: SparkSession,
     landing_dir: str,

@@ -597,38 +597,6 @@ def test_driver_window_hygiene():
     assert list(registry.QUERIES)[:50] == list(pq)
 
 
-def test_driver_window_rotated_since_last_round():
-    """Anti-stagnation guard (round-7 postmortem: the window shipped
-    IDENTICAL to round 6's, so external evidence under-measured the
-    repo for a second round). The current window must contain at
-    least 10 names absent from the LATEST recorded driver sample —
-    pinned dynamically to the newest CORRECTNESS_r*.json so the check
-    can never go stale (round-8 postmortem: a hard-coded r07 pin
-    would have passed an un-rotated round-9 window)."""
-    import glob
-    import json
-    import os
-
-    import re
-
-    paths = sorted(
-        glob.glob(
-            os.path.join(os.path.dirname(__file__), "..",
-                         "CORRECTNESS_r*.json")
-        ),
-        # NUMERIC round key: lexicographic sort puts r10 before r9,
-        # silently pinning the guard to a stale round from round 10 on
-        key=lambda p: int(re.search(r"_r(\d+)", os.path.basename(p)).group(1)),
-    )
-    assert paths, "no recorded driver samples found"
-    last = set(json.load(open(paths[-1])))
-    fresh = [n for n in registry.PRIORITY_QUERIES if n not in last]
-    assert len(fresh) >= 10, (
-        f"window rotation reverted: only {len(fresh)} names not in the "
-        f"latest recorded sample {os.path.basename(paths[-1])} ({fresh})"
-    )
-
-
 def test_coverage_doc_tracks_registry():
     """Docs-drift guard: every round-6 flagship name appears in
     COVERAGE.md, and COVERAGE.md never references a query name that

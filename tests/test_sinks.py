@@ -91,6 +91,62 @@ def test_crash_between_data_and_marker_recovers(spark, tmp_path):
     assert counts[0] == counts[1]  # identical batch, no dup rows
 
 
+def test_write_batch_is_one_spark_job(spark, tmp_path):
+    """Both tables and the epoch land in ONE job commit: no isEmpty
+    probes, no per-kind writes, one decode of the batch."""
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    sc = spark.sparkContext
+    sc.setJobGroup("exactly-once-one-job", "write_batch")
+    try:
+        sink.write_batch(_batch(spark), 0)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("exactly-once-one-job")
+    assert len(jobs) == 1
+    assert sink.last_committed() == 0
+    assert spark.read.parquet(sink.payments_dir).count() == 2
+    assert spark.read.parquet(sink.creations_dir).count() == 2
+
+
+def test_one_sided_batch_writes_one_table(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    sink.write_batch(_batch(spark).filter(F.col("type") == "creation"), 0)
+    assert sink.last_committed() == 0
+    assert not os.path.exists(sink.payments_dir)
+    creations = spark.read.parquet(sink.creations_dir)
+    assert creations.count() == 2
+    # the public read path keeps today's columns: data + epoch_id
+    assert creations.columns == [
+        "source", "destination", "amount", "hash", "epoch_id"
+    ]
+
+
+def test_untagged_rows_are_not_written(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+    other = _batch(spark, n=2).withColumn("type", F.lit("fee"))
+    sink.write_batch(_batch(spark).unionByName(other), 0)
+    parts = {p for p in os.listdir(sink.base_dir) if p.startswith("type=")}
+    assert parts == {"type=payment", "type=creation"}
+    assert spark.read.parquet(sink.payments_dir).count() == 2
+
+
+def test_write_batch_leaves_session_conf_alone(spark, tmp_path):
+    """Dynamic overwrite is a writer option, not session state."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        sink = ExactlyOnceDualSink(str(tmp_path / "out"))
+        sink.write_batch(_batch(spark), 0)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_nullability_enforcement(spark):
     from pyspark.sql import functions as F
 
@@ -202,21 +258,30 @@ def test_jdbc_dual_sink_roundtrip_embedded_derby(spark, tmp_path):
     assert spark.read.jdbc(url, "creations", properties=props).count() == 1
     assert sink.last_committed(spark) == 0
 
-    # crash simulation: epoch 1 data lands partially (1 of 2 payment
+    # payment-only epoch: the empty creation side appends nothing and
+    # the checkpoint still advances
+    sink.write_batch(batch.filter(F.col("type") == "payment"), 1)
+    assert sink.last_committed(spark) == 1
+    assert spark.read.jdbc(url, "payments", properties=props).count() == 4
+    creations = spark.read.jdbc(url, "creations", properties=props)
+    assert creations.filter(F.col("epoch_id") == 1).count() == 0
+    assert creations.count() == 1
+
+    # crash simulation: epoch 2 data lands partially (1 of 2 payment
     # rows), checkpoint write never runs
     batch.filter(F.col("source") == "s1").drop("type").withColumn(
-        "epoch_id", F.lit(1)
+        "epoch_id", F.lit(2)
     ).write.jdbc(url, "payments", mode="append", properties=props)
     all_rows = spark.read.jdbc(url, "payments", properties=props)
-    assert all_rows.count() == 3  # uncommitted partial row physically present
+    assert all_rows.count() == 5  # uncommitted partial row physically present
     visible = committed_view(all_rows, sink.last_committed(spark))
-    assert visible.count() == 2  # ...but invisible to readers
-    assert visible.agg(F.max("epoch_id")).collect()[0][0] == 0
+    assert visible.count() == 4  # ...but invisible to readers
+    assert visible.agg(F.max("epoch_id")).collect()[0][0] == 1
 
     # streaming replays the crashed epoch: delete-before-append removes
     # the partial row, so the retry is exactly-once, not at-least-once
-    sink.write_batch(batch, 1)
-    assert sink.last_committed(spark) == 1
+    sink.write_batch(batch, 2)
+    assert sink.last_committed(spark) == 2
     vis2 = committed_view(
         spark.read.jdbc(url, "payments", properties=props),
         sink.last_committed(spark),
@@ -224,9 +289,9 @@ def test_jdbc_dual_sink_roundtrip_embedded_derby(spark, tmp_path):
     # Derby stores StringType as CLOB (no pushed-down string equality),
     # so assert on the collected rows
     rows = vis2.toPandas()
-    assert len(rows) == 4  # 2 rows per committed epoch — no dupes
+    assert len(rows) == 6  # 2 rows per committed epoch — no dupes
     assert (
-        (rows["epoch_id"] == 1) & (rows["source"] == "s1")
+        (rows["epoch_id"] == 2) & (rows["source"] == "s1")
     ).sum() == 1
 
 
