@@ -77,24 +77,39 @@ def refresh_tables(sf_dir: str | None = None) -> None:
         del _TABLE_CACHE[key]
 
 
-def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one parquet table. Column pruning + predicate pushdown are
-    Catalyst's job — callers select/filter declaratively and the parquet
-    reader sees PushedFilters/ReadSchema.
+def events_ts(df: DataFrame) -> DataFrame:
+    """Normalize a raw ``events`` scan's ``ts`` to TimestampType; works
+    on batch and streaming frames alike.
 
     ``events.ts`` has shipped in two physical vintages: INT64
     TIMESTAMP(NANOS) (reads as a plain long under
     ``spark.sql.legacy.parquet.nanosAsLong``) and plain ``timestamp[us]``
     (reads natively as TIMESTAMP_NTZ). We branch on the dtype actually
-    inferred from the footer and normalize both to TimestampType:
+    inferred from the footer:
 
     - LongType -> nanos, floor-truncated to microseconds (the same
-      truncation DuckDB applies, so oracles agree);
+      truncation DuckDB applies, so oracles agree); integer ``div``
+      keeps the conversion exact (double division would round near the
+      2^53 mantissa edge);
     - TimestampNTZType -> cast to TIMESTAMP. The session timezone is
       pinned to UTC (session.py), so the cast is a pure type
       reinterpretation — identical instants, zero arithmetic — and every
       downstream query keeps seeing the TimestampType it was verified
       against (unix_micros & co. reject NTZ).
+    """
+    ts_type = df.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(ts_type, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+    return df
+
+
+def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one parquet table. Column pruning + predicate pushdown are
+    Catalyst's job — callers select/filter declaratively and the parquet
+    reader sees PushedFilters/ReadSchema. ``events.ts`` comes back as
+    TimestampType whichever vintage is on disk (see ``events_ts``).
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -107,14 +122,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # harmless when the column is a real timestamp; required to even
         # read the legacy nanos vintage
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # integer `div` keeps the conversion exact (double division
-            # would round near the 2^53 mantissa edge)
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(ts_type, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        df = events_ts(spark.read.parquet(path))
     else:
         df = spark.read.parquet(path)
     _TABLE_CACHE[key] = df

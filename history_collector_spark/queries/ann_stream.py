@@ -23,7 +23,6 @@ LLM-pipeline extension tier (round-9 wave).
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ from history_collector_spark.queries.similarity import (
     ivf_bucketed_index,
 )
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.conf import scoped_state_partitions
+from history_collector_spark.streaming.conf import drain_to_memory
 from history_collector_spark.streaming.replay import write_replay_files
 
 _Q_MOD = 103  # disjoint from ann_ivf_bucketed_probe's % 101 set
@@ -128,24 +127,11 @@ def streaming_ann_probe_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qemb"), F.col("cemb"), F.col("qnrm"), F.col("cnrm")
         ).alias("cos_sim"),
     )
-    name = f"annprobe_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
-        spark.table(name)
+        drain_to_memory(scored)
         .withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= 5)
         .select("query_id", "neighbor_id", "cos_sim", "rank")

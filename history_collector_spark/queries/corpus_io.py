@@ -906,11 +906,7 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth. Scale: this is the ingest loop a crawl pipeline runs
     forever — per-batch work is one shard's parse, checkpointing is
     the file-source offset log, and nothing rescans old shards."""
-    import uuid as _uuid
-
-    from history_collector_spark.streaming.conf import (
-        scoped_state_partitions,
-    )
+    from history_collector_spark.streaming.conf import drain_to_memory
 
     src = _write_warc_fixture(spark, sf_dir)
     stream = (
@@ -928,20 +924,7 @@ def streaming_warc_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         _warc_batches,
         schema="source string, doc_id bigint, n_bytes bigint, h32 bigint",
     )
-    name = f"warcstream_{_uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            recs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).groupBy("source").agg(
+    return drain_to_memory(recs).groupBy("source").agg(
         F.count("*").alias("n_records"),
         F.sum("n_bytes").alias("payload_bytes"),
         F.sum("h32").alias("digest_sum"),
@@ -2714,11 +2697,7 @@ def streaming_parquet_ingest_e2e(
     compaction/ingest loop — per-batch work is one file's decode,
     checkpointing is the file-source offset log, nothing rescans old
     files."""
-    import uuid as _uuid
-
-    from history_collector_spark.streaming.conf import (
-        scoped_state_partitions,
-    )
+    from history_collector_spark.streaming.conf import drain_to_memory
 
     src = _write_parquet_raw_fixture(spark, sf_dir)
     stream = (
@@ -2736,20 +2715,7 @@ def streaming_parquet_ingest_e2e(
         _parquet_raw_ingest_batches,
         schema="source string, n_docs bigint, total_chars bigint",
     )
-    name = f"pqrawstream_{_uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            partials.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).groupBy("source").agg(
+    return drain_to_memory(partials).groupBy("source").agg(
         F.sum("n_docs").alias("n_docs"),
         F.sum("total_chars").alias("total_chars"),
     )

@@ -29,7 +29,6 @@ tier; no frontier surface exists in the reference.
 from __future__ import annotations
 
 import os
-import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -49,8 +48,8 @@ from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
 from history_collector_spark.streaming.replay import write_replay_files
 from history_collector_spark.streaming.conf import (
+    drain_to_memory,
     python_state_partitions,
-    scoped_state_partitions,
 )
 
 _N_FILES = 3
@@ -170,22 +169,11 @@ def streaming_frontier_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"frontier_{uuid.uuid4().hex[:8]}"
     # key_bound: politeness state is keyed by host; the discovery feed
     # constructs hosts as doc_id % 17
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=17)):
-        q = (
-            admitted.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    rows = spark.table(name)
+    rows = drain_to_memory(
+        admitted, state_partitions=python_state_partitions(spark, key_bound=17)
+    )
     delay = 1 + (F.col("doc_id") % 17) % 3
     adm = F.col("admitted") == 1
     return rows.groupBy("host").agg(

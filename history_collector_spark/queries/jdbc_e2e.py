@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
 from history_collector_spark.sinks.jdbc import JdbcDualSink, committed_view
-from history_collector_spark.streaming.conf import scoped_state_partitions
+from history_collector_spark.streaming.conf import run_once
 
 _SLICE = 4096
 _N_FILES = 3
@@ -97,25 +97,12 @@ def streaming_jdbc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink.ensure_tables(spark)
 
     schema = "type string, source bigint, amount bigint"
-    with scoped_state_partitions(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(flat)
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="hc_jdbc_ckpt_"),
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(flat)
+    )
+    run_once(stream.writeStream.foreachBatch(sink))
 
     committed = sink.last_committed(spark)
     out = []

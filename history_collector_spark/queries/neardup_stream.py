@@ -49,7 +49,6 @@ from __future__ import annotations
 import hashlib
 import os
 import re
-import uuid
 from typing import Iterator
 
 import numpy as np
@@ -71,7 +70,10 @@ from history_collector_spark.catalog import table
 from history_collector_spark.functions.nlp import MH_PRIME, mh_consts
 from history_collector_spark.registry import register
 from history_collector_spark.streaming.replay import write_replay_files
-from history_collector_spark.streaming.conf import scoped_state_partitions
+from history_collector_spark.streaming.conf import (
+    drain_to_memory,
+    python_state_partitions,
+)
 
 N_HASHES = 32
 N_BANDS = 16
@@ -305,25 +307,6 @@ def _doc_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     return flat
 
 
-def _run_to_table(
-    spark: SparkSession, out: DataFrame, prefix: str, n_state: int = 8
-) -> DataFrame:
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, n_state):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name)
-
-
 # Batch LSH CTE over a PARAMETRIZED doc set (dedup._BUCKETS_SQL is
 # all-docs; the streaming oracle needs the same math with the pair
 # filter applied afterwards, so it is restated here over `documents`).
@@ -432,8 +415,5 @@ def streaming_neardup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # More state tasks = more concurrent Python workers; the
     # state-store init cost the JVM-side streams tune DOWN for is not
     # the binding constraint here.
-    merged = _run_to_table(
-        spark, both, "ndpairs",
-        n_state=spark.sparkContext.defaultParallelism,
-    )
+    merged = drain_to_memory(both, state_partitions=python_state_partitions(spark))
     return merged.distinct()

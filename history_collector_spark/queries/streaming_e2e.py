@@ -23,15 +23,13 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from history_collector_spark.catalog import table
+from history_collector_spark.catalog import events_ts, table
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.conf import scoped_state_partitions
+from history_collector_spark.streaming.conf import drain_to_memory
 from history_collector_spark.sources.xdr import (
     LEDGERS_PER_FILE,
     write_archive_file,
@@ -39,6 +37,20 @@ from history_collector_spark.sources.xdr import (
 from history_collector_spark.streaming.ingest import read_archive_stream
 
 _SLICE = 8192  # orders with o_orderkey < _SLICE -> 128 ledgers -> 2 files
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`events` replayed as a file stream, `ts` normalized exactly as
+    catalog.table does for the batch scan (both on-disk vintages)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    return events_ts(
+        # the streaming file source wants a directory: stream the sf
+        # dir, glob-filtered to the events file
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
 
 
 def _write_archive_from_orders(spark: SparkSession, sf_dir: str) -> str:
@@ -98,21 +110,12 @@ def streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Archive -> file stream -> decode -> per-ledger counts, exactly
     the batch truth: the §2.7-a/b ingest path, driver-verified."""
     landing = _write_archive_from_orders(spark, sf_dir)
-    name = f"ingest_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
+    try:
+        decoded = drain_to_memory(
             read_archive_stream(spark, landing, max_files_per_trigger=1)
-            .writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-            shutil.rmtree(landing, ignore_errors=True)
-    decoded = spark.table(name)
+    finally:
+        shutil.rmtree(landing, ignore_errors=True)
     return decoded.select(
         "ledger_seq",
         F.size("txs").cast("long").alias("n_txs"),
@@ -131,46 +134,14 @@ def streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`events` replayed as a stream into a watermarked tumbling-window
     count (§2.7-f), complete mode so every window is emitted before
-    AvailableNow terminates; must equal the batch window aggregate.
-
-    The stream branches on the inferred `ts` dtype — a long column is
-    legacy INT64 nanos and converts in-stream (the streaming twin of
-    catalog.table's self-heal); a timestamp column passes through."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
-    stream = (
-        # the streaming file source wants a directory: stream the sf
-        # dir, glob-filtered to the events file
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        # UTC session tz -> pure reinterpretation (see catalog.table)
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    stream = stream.select("ts", "event_type")
+    AvailableNow terminates; must equal the batch window aggregate."""
+    stream = _events_stream(spark, sf_dir).select("ts", "event_type")
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .count()
     )
-    name = f"wincnt_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(agg, "complete").select(
         F.col("w.start").alias("window_start"),
         "event_type",
         F.col("count").alias("n"),
@@ -192,38 +163,14 @@ def streaming_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     running ingest needs (plain dropDuplicates state grows without
     bound). Append-mode output must equal the batch DISTINCT.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    stream = stream.select(
+    stream = _events_stream(spark, sf_dir).select(
         "user_id", "event_type",
         F.date_trunc("DAY", F.col("ts")).alias("day"),
     )
     deduped = stream.withWatermark("day", "1 day").dropDuplicatesWithinWatermark(
         ["user_id", "event_type", "day"]
     )
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("user_id", "event_type", "day")
+    return drain_to_memory(deduped).select("user_id", "event_type", "day")
 
 
 @register(
@@ -243,14 +190,7 @@ def streaming_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the dimension, not the stream. Complete-mode aggregate must
     equal the batch join+agg.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("user_id", "value")
-    )
+    stream = _events_stream(spark, sf_dir).select("user_id", "value")
     customer = table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -261,20 +201,9 @@ def streaming_static_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_events"),
         F.sum("value").alias("total_value"),
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("nationkey", "n_events", "total_value")
+    return drain_to_memory(agg, "complete").select(
+        "nationkey", "n_events", "total_value"
+    )
 
 
 @register(
@@ -304,41 +233,17 @@ def streaming_sessionize_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing its gap-islands oracle. Session state merges windows whose
     gap is < 30 min; complete mode emits every session at AvailableNow
     termination, so the result must equal the batch sessionization.
-
-    The ts dtype branch mirrors catalog.table's two-vintage self-heal
-    (see streaming_window_counts).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     agg = (
-        stream.select("user_id", "ts")
+        _events_stream(spark, sf_dir)
+        .select("user_id", "ts")
         .withWatermark("ts", "1 hour")
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.min("ts").alias("session_start"), F.count("*").alias("n_events"))
     )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("user_id", "session_start", "n_events")
+    return drain_to_memory(agg, "complete").select(
+        "user_id", "session_start", "n_events"
+    )
 
 
 @register(
@@ -359,32 +264,15 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, and the watermark + time-range condition is what lets Spark
     evict it (state is bounded by the interval, not the stream length).
     Inner-join append output must equal the batch interval join.
-
-    The ts dtype branch mirrors catalog.table's two-vintage self-heal.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def ev_stream():
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        if isinstance(raw_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        return s
-
     signups = (
-        ev_stream()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select(F.col("user_id").alias("s_user"), F.col("ts").alias("signup_ts"))
         .withWatermark("signup_ts", "1 hour")
     )
     purchases = (
-        ev_stream()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
         .withWatermark("purchase_ts", "1 hour")
@@ -399,20 +287,7 @@ def streaming_interval_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             """
         ),
     )
-    name = f"ivjoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(joined).select(
         F.col("s_user").alias("user_id"), "signup_ts", "purchase_ts"
     )
 
@@ -469,29 +344,14 @@ def streaming_outer_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     State is bounded by the interval length x arrival rate per key —
     the watermark eviction being verified here is precisely what keeps
     a 100 TB stream-stream join's state finite."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
-    def ev_stream():
-        s = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        if isinstance(raw_schema["ts"].dataType, T.LongType):
-            s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-            s = s.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-        return s
-
     signups = (
-        ev_stream()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "signup")
         .select(F.col("user_id").alias("s_user"), F.col("ts").alias("signup_ts"))
         .withWatermark("signup_ts", "1 hour")
     )
     purchases = (
-        ev_stream()
+        _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"), F.col("ts").alias("purchase_ts"))
         .withWatermark("purchase_ts", "1 hour")
@@ -507,19 +367,6 @@ def streaming_outer_join_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    name = f"ovjoin_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(joined).select(
         F.col("s_user").alias("user_id"), "signup_ts", "purchase_ts"
     )

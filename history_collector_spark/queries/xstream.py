@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -36,8 +35,9 @@ from pyspark.sql import functions as F
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
 from history_collector_spark.streaming.conf import (
+    drain_to_memory,
     python_state_partitions,
-    scoped_state_partitions,
+    run_once,
 )
 from history_collector_spark.streaming.replay import write_replay_files
 from history_collector_spark.streaming.stateful import (
@@ -117,23 +117,16 @@ def streaming_gapless_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(flat)
     )
     released = track_gapless(stream, start_seq=0, step=_STEP)
-    name = f"gapless_{uuid.uuid4().hex[:8]}"
     # key_bound=2: the feed constructs exactly two stream_ids (r16 —
     # 32 state partitions cost 2-7 s of Python round-trips PER BATCH)
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=2)):
-        q = (
-            released.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    try:
+        out = drain_to_memory(
+            released,
+            state_partitions=python_state_partitions(spark, key_bound=2),
         )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-            shutil.rmtree(flat, ignore_errors=True)
-    return spark.table(name).select("stream_id", "seq", "status")
+    finally:
+        shutil.rmtree(flat, ignore_errors=True)
+    return out.select("stream_id", "seq", "status")
 
 
 # Replay feed memo: the EWMA and z-score e2e queries consume the IDENTICAL
@@ -237,21 +230,7 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
         )
 
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(upsert_batch)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation",
-                tempfile.mkdtemp(prefix="hc_upsert_ck_"),
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    run_once(agg.writeStream.foreachBatch(upsert_batch).outputMode("update"))
     deltas = spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "epoch=*")
     )
@@ -369,20 +348,7 @@ def streaming_late_drop_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .count()
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select(
+    return drain_to_memory(agg).select(
         F.col("w.start").alias("window_start"),
         "event_type",
         F.col("count").alias("n"),
@@ -488,22 +454,11 @@ def streaming_topk_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the fixture stays 3 columns (the tracker only needs an id stream)
     stream = stream.withColumn("user_id", F.col("event_id") % 50)
     out = track_heavy_hitters(stream)
-    name = f"topk_{uuid.uuid4().hex[:8]}"
     # key_bound: the tracker is keyed by event_type — a small, fixed
     # domain (5 types in the fixture; event taxonomies are O(10))
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=5)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    snaps = spark.table(name)
+    snaps = drain_to_memory(
+        out, state_partitions=python_state_partitions(spark, key_bound=5)
+    )
     w = Window.partitionBy("event_type")
     return (
         snaps.withColumn("max_seen", F.max("n_seen").over(w))
@@ -564,19 +519,9 @@ def streaming_ewma_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(flat)
     )
     out = track_ewma(stream, _EWMA_ALPHA)
-    name = f"sewma_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "ewma")
+    return drain_to_memory(
+        out, state_partitions=python_state_partitions(spark)
+    ).select("event_id", "user_id", "ewma")
 
 
 # ---------------------------------------------------------------------------
@@ -619,19 +564,9 @@ def streaming_zscore_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(flat)
     )
     out = track_zscore(stream)
-    name = f"szs_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "z")
+    return drain_to_memory(
+        out, state_partitions=python_state_partitions(spark)
+    ).select("event_id", "user_id", "z")
 
 
 # ---------------------------------------------------------------------------
@@ -720,20 +655,7 @@ def streaming_scd2_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out_dir, f"epoch={epoch_id}")
         )
 
-    with scoped_state_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply_cdc)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="hc_scd2_ck_")
-            )
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
+    run_once(stream.writeStream.foreachBatch(apply_cdc).outputMode("append"))
 
     snaps = spark.read.option("basePath", out_dir).parquet(
         os.path.join(out_dir, "epoch=*")
@@ -798,19 +720,9 @@ def streaming_page_hinkley_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(flat)
     )
     out = track_page_hinkley(stream, _PH_DELTA, _PH_LAMBDA)
-    name = f"sph_{uuid.uuid4().hex[:8]}"
-    with scoped_state_partitions(spark, python_state_partitions(spark)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    return spark.table(name).select("event_id", "user_id", "ph", "drift")
+    return drain_to_memory(
+        out, state_partitions=python_state_partitions(spark)
+    ).select("event_id", "user_id", "ph", "drift")
 
 
 # ---------------------------------------------------------------------------
@@ -900,20 +812,10 @@ def streaming_hll_merge_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("rho"),
     )
     out = track_hll(enriched, m=_SHLL_M)
-    name = f"shll_{uuid.uuid4().hex[:8]}"
     # key_bound: state is keyed by shard = user_id % _SHLL_SHARDS
-    with scoped_state_partitions(spark, python_state_partitions(spark, key_bound=_SHLL_SHARDS)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-    t = spark.table(name)
+    t = drain_to_memory(
+        out, state_partitions=python_state_partitions(spark, key_bound=_SHLL_SHARDS)
+    )
     last = (
         t.groupBy("shard")
         .agg(F.max("upd").alias("u"))

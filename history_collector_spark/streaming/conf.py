@@ -1,11 +1,41 @@
-"""Streaming runtime sizing helpers."""
+"""The bounded-stream drain path and streaming state sizing.
+
+Every bounded stream in the engine ends the same way: it runs once
+under ``Trigger.AvailableNow`` (the run-once trigger of the Structured
+Streaming paper) and its sink is read back. ``run_once`` is that step,
+and the only place it is written down. Its contract:
+
+- ``spark.sql.shuffle.partitions`` is set to the stream's state-partition
+  count for the start and drain, then restored. A stateful query fixes
+  its state partitions at first start, so this is the one moment the
+  size is chosen; the session's batch setting is never left changed.
+- The writer gets a fresh temp ``checkpointLocation``. It is deleted
+  once the query has stopped, whether the drain succeeded or raised.
+- The query is started with ``trigger(availableNow=True)``, awaited, and
+  stopped in ``finally``: an error raised inside a micro-batch (a
+  failing ``foreachBatch``, say) propagates to the caller, and no query
+  is left running behind it.
+
+``drain_to_memory`` is the read-back form used by the registered
+streams. It drains into the in-memory sink under a unique name, takes
+``spark.table(name)`` and drops that temp view at once. The returned
+frame's plan holds the sink's rows itself, so it still collects (and
+can still be transformed, joined with itself, and so on) after the view
+is gone, and no result table accumulates in the session catalog.
+
+The long-running, checkpointed production ingest
+(``streaming/ingest.py:start_ingest``) owns its checkpoint and trigger,
+and does not go through this path.
+"""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
+import shutil
+import tempfile
+import uuid
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from history_collector_spark.functions.scope import scoped_shuffle_partitions
 
@@ -23,16 +53,48 @@ from history_collector_spark.functions.scope import scoped_shuffle_partitions
 # batch-oriented session default is active.
 STREAM_STATE_PARTITIONS = 8
 
+CHECKPOINT_PREFIX = "hc_drain_ck_"
 
-@contextmanager
-def scoped_state_partitions(
-    spark: SparkSession, n: int = STREAM_STATE_PARTITIONS
-) -> Iterator[None]:
-    """Temporarily set spark.sql.shuffle.partitions around a streaming
-    query's start+drain so its state stores are sized for the stream,
-    then restore the session's batch setting."""
-    with scoped_shuffle_partitions(spark, n):
-        yield
+
+def run_once(
+    writer: DataStreamWriter, state_partitions: int = STREAM_STATE_PARTITIONS
+) -> None:
+    """Drain ``writer``'s stream to its sink under AvailableNow and
+    clean up after it (see the module docstring for the contract)."""
+    spark = writer._spark
+    checkpoint = tempfile.mkdtemp(prefix=CHECKPOINT_PREFIX)
+    try:
+        with scoped_shuffle_partitions(spark, state_partitions):
+            q = (
+                writer.option("checkpointLocation", checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()
+    finally:
+        shutil.rmtree(checkpoint, ignore_errors=True)
+
+
+def drain_to_memory(
+    df: DataFrame,
+    output_mode: str = "append",
+    state_partitions: int = STREAM_STATE_PARTITIONS,
+) -> DataFrame:
+    """Drain the streaming frame ``df`` into the memory sink and return
+    its rows as a batch frame; the sink's temp view is already dropped."""
+    spark = df.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    try:
+        run_once(
+            df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+            state_partitions,
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def python_state_partitions(spark: SparkSession, key_bound: int | None = None) -> int:

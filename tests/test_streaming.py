@@ -4,12 +4,18 @@ watermarked dedup."""
 
 from __future__ import annotations
 
+import glob
 import os
+import re
 import sys
+import tempfile
+
+import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from history_collector_spark.sinks.exactly_once import ExactlyOnceDualSink
 from history_collector_spark.sources.xdr import write_archive_file
@@ -232,3 +238,172 @@ def test_failure_notifier_fires_on_stream_failure(spark, tmp_path):
             break
         time.sleep(0.2)
     assert failures and "sink blew up" in failures[0]
+
+
+# -- the drain path (streaming/conf.py) ----------------------------------------
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+def _drain_checkpoints() -> set[str]:
+    from history_collector_spark.streaming.conf import CHECKPOINT_PREFIX
+
+    return set(glob.glob(os.path.join(tempfile.gettempdir(), CHECKPOINT_PREFIX + "*")))
+
+
+@pytest.fixture
+def odd_shuffle_partitions(spark):
+    """A session shuffle-partition count no stream uses, so a drain
+    that forgot to restore it is visible."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield "3"
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize(
+    "name", ["streaming_window_counts", "streaming_upsert_e2e"]
+)
+def test_drain_leaves_nothing_behind(spark, odd_shuffle_partitions, name):
+    """A memory-sink drain and a foreachBatch drain, run as registered
+    queries: the result still collects, and no temp view, running
+    query, changed conf or checkpoint dir outlives the call."""
+    from history_collector_spark import registry
+    from tests.conftest import TEST_SF_DIR
+
+    registry.load_all()
+    views, ckpts = _temp_views(spark), _drain_checkpoints()
+    rows = registry.QUERIES[name](spark, TEST_SF_DIR).collect()
+    assert rows
+    assert _temp_views(spark) == views
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == odd_shuffle_partitions
+    assert _drain_checkpoints() == ckpts
+
+
+def test_run_once_cleans_up_after_failing_batch(
+    spark, odd_shuffle_partitions, tmp_path
+):
+    """A foreachBatch that raises: the error reaches the caller, and the
+    query is stopped, the conf restored and the checkpoint deleted."""
+    from history_collector_spark.streaming.conf import run_once
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+
+    def exploding_batch(batch_df, epoch_id):
+        raise RuntimeError("drain batch blew up")
+
+    ckpts = _drain_checkpoints()
+    with pytest.raises(Exception, match="drain batch blew up"):
+        run_once(stream.writeStream.foreachBatch(exploding_batch))
+    assert spark.streams.active == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == odd_shuffle_partitions
+    assert _drain_checkpoints() == ckpts
+
+
+def test_drain_to_memory_result_outlives_its_view(spark, tmp_path):
+    """The returned frame collects, self-joins and aggregates after the
+    sink's temp view is gone; the output mode is honoured."""
+    from history_collector_spark.streaming.conf import drain_to_memory
+
+    src = str(tmp_path / "src")
+    spark.range(10).withColumn("k", F.col("id") % 3).write.parquet(src)
+    stream = spark.readStream.schema("id long, k long").parquet(src)
+    views = _temp_views(spark)
+    counts = drain_to_memory(stream.groupBy("k").count(), "complete")
+    assert _temp_views(spark) == views
+    assert sorted(tuple(r) for r in counts.collect()) == [(0, 4), (1, 3), (2, 3)]
+    top = counts.agg(F.max("count").alias("m"))
+    assert counts.join(top, counts["count"] == top["m"]).count() == 1
+
+
+# -- events.ts: both on-disk vintages --------------------------------------------
+
+# nanos that are not whole micros, so the floor to micros is exercised
+_TS_NANOS = [
+    1_700_000_000_123_456_789,
+    1_700_003_600_000_000_999,
+    86_400_000_000_001,
+]
+
+
+def _write_events(sf_dir: str, unit: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(sf_dir)
+    ts = [n if unit == "ns" else n // 1000 for n in _TS_NANOS]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(len(ts)), pa.int64()),
+                "event_type": pa.array(["view"] * len(ts)),
+                "ts": pa.array(ts, pa.timestamp(unit)),
+            }
+        ),
+        os.path.join(sf_dir, "events.parquet"),
+    )
+
+
+@pytest.mark.parametrize(
+    "unit, raw_type", [("ns", T.LongType()), ("us", T.TimestampNTZType())]
+)
+def test_events_ts_both_vintages(spark, tmp_path, unit, raw_type):
+    """`timestamp[ns]` (read as nanos-long) and `timestamp[us]` (read as
+    TIMESTAMP_NTZ) both come out as TimestampType with the same
+    instants — from the batch catalog scan and from the file stream."""
+    from history_collector_spark.catalog import table
+    from history_collector_spark.queries.streaming_e2e import _events_stream
+    from history_collector_spark.streaming.conf import drain_to_memory
+
+    sf_dir = str(tmp_path / f"sf_{unit}")
+    _write_events(sf_dir, unit)
+    batch = table(spark, sf_dir, "events")
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    assert raw.schema["ts"].dataType == raw_type
+    stream = _events_stream(spark, sf_dir)
+    assert batch.schema["ts"].dataType == T.TimestampType()
+    assert stream.schema["ts"].dataType == T.TimestampType()
+
+    def micros(df):
+        return sorted(r[0] for r in df.select(F.unix_micros("ts")).collect())
+
+    want = sorted(n // 1000 for n in _TS_NANOS)
+    assert micros(batch) == want
+    assert micros(drain_to_memory(stream)) == want
+
+
+# -- no second drain path ----------------------------------------------------------
+
+_DRAIN_OWNERS = {
+    os.path.join("streaming", "conf.py"),  # run_once / drain_to_memory
+    os.path.join("streaming", "ingest.py"),  # the long-running start_ingest
+}
+_DRAIN_MARKERS = re.compile(
+    r"""trigger\(\s*availableNow\s*=\s*True|format\(\s*["']memory["']"""
+)
+
+
+def test_one_drain_path():
+    """Bounded streams drain through streaming/conf.py only: an
+    availableNow trigger or a memory sink anywhere else in the package
+    is a hand-rolled copy of run_once / drain_to_memory."""
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "history_collector_spark",
+    )
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel in _DRAIN_OWNERS:
+            continue
+        with open(path, encoding="utf-8") as fh:
+            for lineno, line in enumerate(fh, 1):
+                if _DRAIN_MARKERS.search(line):
+                    offenders.append(f"{rel}:{lineno}: {line.strip()}")
+    assert not offenders, "\n".join(offenders)
