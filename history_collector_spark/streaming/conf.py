@@ -26,6 +26,9 @@ is gone, and no result table accumulates in the session catalog.
 The long-running, checkpointed production ingest
 (``streaming/ingest.py:start_ingest``) owns its checkpoint and trigger,
 and does not go through this path.
+
+In sessions from ``session.get_spark``, drain checkpoints (and the
+ingest's) are written through ``FileSystemBasedCheckpointFileManager``.
 """
 
 from __future__ import annotations
