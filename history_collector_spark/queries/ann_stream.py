@@ -22,8 +22,6 @@ LLM-pipeline extension tier (round-9 wave).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,21 +34,15 @@ from history_collector_spark.queries.similarity import (
 )
 from history_collector_spark.registry import register
 from history_collector_spark.streaming.conf import drain_to_memory
-from history_collector_spark.streaming.replay import write_replay_files
+from history_collector_spark.streaming.replay import per_session, write_replay_files
 
 _Q_MOD = 103  # disjoint from ann_ivf_bucketed_probe's % 101 set
 _N_FILES = 3
 
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
-
-
+@per_session
 def _query_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """The probe-query feed as _N_FILES vec_id-range parquet files with
     increasing mtimes (same replay idiom as the other streaming e2e)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     q = (
         table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % _Q_MOD == 0)
@@ -65,11 +57,9 @@ def _query_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             / (F.col("mx") - F.col("mn") + F.lit(1))
         ).cast("int"),
     )
-    flat = write_replay_files(
+    return write_replay_files(
         feed, ("vec_id", "label", "embedding"), _N_FILES, prefix="hc_annq_"
     )
-    _REPLAY_CACHE[key] = flat
-    return flat
 
 
 @register(

@@ -28,7 +28,6 @@ tier; no frontier surface exists in the reference.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -46,7 +45,7 @@ from pyspark.sql.types import (
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.replay import write_replay_files
+from history_collector_spark.streaming.replay import per_session, write_replay_files
 from history_collector_spark.streaming.conf import (
     drain_to_memory,
     python_state_partitions,
@@ -54,8 +53,6 @@ from history_collector_spark.streaming.conf import (
 
 _N_FILES = 3
 _BUDGET = 25  # per-host admissions per crawl cycle (spans batches)
-
-_REPLAY_CACHE: dict[tuple[str, str], str] = {}
 
 _OUT_SCHEMA = StructType(
     [
@@ -68,14 +65,11 @@ _OUT_SCHEMA = StructType(
 _STATE_SCHEMA = StructType([StructField("n_admitted", LongType())])
 
 
+@per_session
 def _frontier_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Discovery feed: _N_FILES doc_id-range parquet files with
     increasing mtimes (the replay idiom shared by every streaming
     e2e here)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     docs = table(spark, sf_dir, "documents").select("doc_id")
     bounds = docs.agg(
         F.min("doc_id").alias("mn"), F.max("doc_id").alias("mx")
@@ -88,11 +82,9 @@ def _frontier_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             / (F.col("mx") - F.col("mn") + F.lit(1))
         ).cast("int"),
     )
-    flat = write_replay_files(
+    return write_replay_files(
         feed, ("doc_id",), _N_FILES, prefix="hc_frontier_"
     )
-    _REPLAY_CACHE[key] = flat
-    return flat
 
 
 def _admit(

@@ -47,7 +47,6 @@ this extends its exactly-once ingest loop (reference python/main.py:
 from __future__ import annotations
 
 import hashlib
-import os
 import re
 from typing import Iterator
 
@@ -69,7 +68,7 @@ from pyspark.sql.types import (
 from history_collector_spark.catalog import table
 from history_collector_spark.functions.nlp import MH_PRIME, mh_consts
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.replay import write_replay_files
+from history_collector_spark.streaming.replay import per_session, write_replay_files
 from history_collector_spark.streaming.conf import (
     drain_to_memory,
     python_state_partitions,
@@ -272,18 +271,12 @@ def track_bucket_pairs(
     )
 
 
-_DOC_REPLAY_CACHE: dict[tuple[str, str], str] = {}
-
-
+@per_session
 def _doc_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """Odd-doc_id documents as _N_FILES doc_id-range-partitioned parquet
     files with strictly increasing mtimes (the file source orders
     micro-batches by modification time), memoized per (session, corpus)
     like xstream._time_partitioned_replay_dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DOC_REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     docs = (
         table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 2 == 1)
@@ -300,11 +293,9 @@ def _doc_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             / (F.col("mx") - F.col("mn") + F.lit(1))
         ).cast("int"),
     )
-    flat = write_replay_files(
+    return write_replay_files(
         feed, ("doc_id", "text"), _N_FILES, prefix="hc_neardup_"
     )
-    _DOC_REPLAY_CACHE[key] = flat
-    return flat
 
 
 # Batch LSH CTE over a PARAMETRIZED doc set (dedup._BUCKETS_SQL is

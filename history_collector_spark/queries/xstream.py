@@ -39,7 +39,7 @@ from history_collector_spark.streaming.conf import (
     python_state_partitions,
     run_once,
 )
-from history_collector_spark.streaming.replay import write_replay_files
+from history_collector_spark.streaming.replay import per_session, write_replay_files
 from history_collector_spark.streaming.stateful import (
     MG_CAPACITY,
     track_ewma,
@@ -129,14 +129,10 @@ def streaming_gapless_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("stream_id", "seq", "status")
 
 
-# Replay feed memo: the EWMA and z-score e2e queries consume the IDENTICAL
-# 6-file feed, so it is built once per (session, sf_dir, n_files) and
-# shared — exactly like dedup.candidate_pair_table. Keyed by applicationId
-# so a fresh session (new JVM temp state) rebuilds. Dirs are left for the
-# OS tempdir reaper rather than rmtree'd after the first consumer.
-_REPLAY_DIR_CACHE: dict[tuple[str, str, int], str] = {}
-
-
+# The EWMA, z-score and upsert e2e queries consume the IDENTICAL 6-file
+# feed, so it is built once per (session, sf_dir, n_files) and shared —
+# exactly like dedup.candidate_pair_table. Spark deletes it on stop().
+@per_session
 def _time_partitioned_replay_dir(
     spark: SparkSession, sf_dir: str, n_files: int
 ) -> str:
@@ -146,15 +142,8 @@ def _time_partitioned_replay_dir(
     a map-only 1-row bounds broadcast (fixture construction never
     sorts globally); mtimes are pinned because the file source orders
     batches by MODIFICATION time and same-second copies would scramble
-    the replay. Memoized per (session, corpus, n_files) so the two
+    the replay. Memoized per (session, corpus, n_files) so the
     stateful e2e consumers pay the fixture I/O once."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    cached = _REPLAY_DIR_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "value"
     )
@@ -168,14 +157,12 @@ def _time_partitioned_replay_dir(
             / (F.col("mx") - F.col("mn") + F.lit(1))
         ).cast("int"),
     )
-    flat = write_replay_files(
+    return write_replay_files(
         feed,
         ("event_id", "ts", "user_id", "value"),
         n_files,
         prefix="hc_replay_",
     )
-    _REPLAY_DIR_CACHE[key] = flat
-    return flat
 
 
 # ---------------------------------------------------------------------------
@@ -248,11 +235,11 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and genuinely late rows are DROPPED, deterministically.
 # ---------------------------------------------------------------------------
 
-_LATE_REPLAY_CACHE: dict[tuple[str, str], str] = {}
 _LATE_FILES = 6
 _LATE_DELAY_MIN = 90  # watermark delay
 
 
+@per_session
 def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     """The 6-file time-range replay, with a deterministic twist: rows
     with event_id % 13 == 0 from the first two buckets arrive FOUR
@@ -260,12 +247,6 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
     unambiguously beyond any sane watermark. Bucketing is integer
     `div` arithmetic so the DuckDB oracle reproduces the displacement
     exactly."""
-    import os
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _LATE_REPLAY_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     us = F.unix_micros("ts")
     bounds = ev.agg(F.min(us).alias("mn"), F.max(us).alias("mx"))
@@ -285,15 +266,13 @@ def _late_replay_dir(spark: SparkSession, sf_dir: str) -> str:
             ).otherwise(F.col("orig")),
         )
     )
-    flat = write_replay_files(
+    return write_replay_files(
         feed,
         ("event_id", "ts", "event_type"),
         _LATE_FILES,  # displaced arrivals stay within 0.._LATE_FILES-1
         bucket_col="arrival",
         prefix="hc_late_",
     )
-    _LATE_REPLAY_CACHE[key] = flat
-    return flat
 
 
 @register(

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from history_collector_spark.sources.xdr import ENTRY_SCHEMA, _parse_payload
+from history_collector_spark.sources.xdr import ENTRY_SCHEMA, _decode_batches
 
 
 def read_archive_stream(
@@ -59,28 +59,7 @@ def read_archive_stream(
         .load(landing_dir)
         .select("path", "content")
     )
-
-    def decode(batches):
-        import pandas as pd
-
-        from history_collector_spark.sources.xdr import _FILE_SEQ_RE
-
-        for pdf in batches:
-            rows = []
-            for path, raw in zip(pdf["path"], pdf["content"]):
-                m = _FILE_SEQ_RE.search(str(path))
-                rows.extend(
-                    _parse_payload(
-                        bytes(raw), file_seq=m.group(1) if m else None
-                    )
-                )
-            yield (
-                pd.DataFrame(rows, columns=["file_seq", "ledger_seq", "txs"])
-                if rows
-                else pd.DataFrame({"file_seq": [], "ledger_seq": [], "txs": []})
-            )
-
-    return files.mapInPandas(decode, schema=ENTRY_SCHEMA)
+    return files.mapInPandas(_decode_batches, schema=ENTRY_SCHEMA)
 
 
 # memo app-id tag `1-<app>-...`; `[A-z]` kept from python/main.py:57-58

@@ -7,8 +7,10 @@ from __future__ import annotations
 import glob
 import os
 import re
+import subprocess
 import sys
 import tempfile
+import textwrap
 
 import pytest
 
@@ -282,6 +284,70 @@ def test_drain_leaves_nothing_behind(spark, odd_shuffle_partitions, name):
     assert spark.streams.active == []
     assert spark.conf.get("spark.sql.shuffle.partitions") == odd_shuffle_partitions
     assert _drain_checkpoints() == ckpts
+
+
+# Runs the z-score e2e twice in a session made for the test, then stops
+# that session. Prints the replay fixture dirs and what is left of them.
+_REPLAY_LIFETIME_PROBE = textwrap.dedent(
+    """
+    import glob, json, os, sys, tempfile
+    root, sf_dir = sys.argv[1:3]
+    sys.path.insert(0, root)
+    from pyspark import SparkFiles
+    from history_collector_spark import registry
+    from history_collector_spark.session import get_spark
+    from history_collector_spark.streaming import replay
+
+    def tmp_fixtures():
+        return glob.glob(os.path.join(tempfile.gettempdir(), "hc_*"))
+
+    tmp_before = tmp_fixtures()
+    spark = get_spark(app_name="replay-lifetime-probe", cpus=2)
+    registry.load_all()
+    run = registry.QUERIES["streaming_zscore_e2e"]
+    rows = len(run(spark, sf_dir).collect())
+    first = sorted(replay._memo.values())
+    assert rows == len(run(spark, sf_dir).collect())
+    out = {
+        "rows": rows,
+        "dirs": first,
+        "warm_dirs": sorted(replay._memo.values()),
+        "files_root": SparkFiles.getRootDirectory(),
+        "existed": [os.path.isdir(d) for d in first],
+    }
+    spark.stop()
+    out["left"] = [d for d in first if os.path.exists(d)]
+    out["new_tmp"] = sorted(set(tmp_fixtures()) - set(tmp_before))
+    print(json.dumps(out))
+    """
+)
+
+
+def test_replay_fixtures_end_with_their_session(tmp_path):
+    """The memoized replay feed is built once per session, under the
+    session's SparkFiles root, and ``spark.stop()`` deletes it."""
+    import json
+
+    from tests.conftest import TEST_SF_DIR
+
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g", TMPDIR=str(tmp_path))
+    env.pop("SPARK_MASTER", None)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", _REPLAY_LIFETIME_PROBE, root, TEST_SF_DIR],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    out = json.loads(res.stdout.splitlines()[-1])
+    assert out["rows"] > 0
+    assert len(out["dirs"]) == 1 and out["existed"] == [True]
+    assert out["warm_dirs"] == out["dirs"]  # the warm run reused the feed
+    assert out["dirs"][0].startswith(out["files_root"] + os.sep)
+    assert out["left"] == []
+    assert out["new_tmp"] == []
 
 
 def test_run_once_cleans_up_after_failing_batch(
