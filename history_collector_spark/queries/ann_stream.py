@@ -33,8 +33,9 @@ from history_collector_spark.queries.similarity import (
     ivf_bucketed_index,
 )
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import per_session
 from history_collector_spark.streaming.conf import drain_to_memory
-from history_collector_spark.streaming.replay import per_session, write_replay_files
+from history_collector_spark.streaming.replay import write_replay_files
 
 _Q_MOD = 103  # disjoint from ann_ivf_bucketed_probe's % 101 set
 _N_FILES = 3

@@ -25,7 +25,6 @@ this family is the engine-native surface a warehouse user needs.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -34,6 +33,7 @@ from pyspark.sql import functions as F
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
 from history_collector_spark.pinning import pin_local
+from history_collector_spark.scratch import scratch_dir
 
 
 @register(
@@ -95,13 +95,13 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Land orders and lineitem as external BUCKETED tables (once per
     sf_dir per session): bucketBy(join key) + sortBy pre-pays the
     shuffle+sort at write time. Table metadata lives in the session
-    catalog; data files land in a temp dir."""
+    catalog; data files land in a ``scratch_dir``."""
     key = f"{id(spark)}:{sf_dir}"
     if key in _BUCKET_FIXTURES:
         o_tab, l_tab = _BUCKET_FIXTURES[key]
         if spark.catalog.tableExists(o_tab) and spark.catalog.tableExists(l_tab):
             return o_tab, l_tab
-    base = tempfile.mkdtemp(prefix="hc_buckets_")
+    base = scratch_dir("hc_buckets_")
     tag = uuid.uuid4().hex[:8]
     o_tab, l_tab = f"orders_b_{tag}", f"lineitem_b_{tag}"
     (

@@ -37,9 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table
-from history_collector_spark.queries.corpus_io import _fixture_dir
 from history_collector_spark.registry import register
 from history_collector_spark.pinning import pin_local
+from history_collector_spark.scratch import per_session, scratch_dir
 
 _WORDS_PER_PARA = 40
 _MAX_LINK_DENSITY = 0.35
@@ -90,14 +90,11 @@ def render_page(doc_id: int, source: str, text: str) -> str:
     )
 
 
+@per_session
 def _write_html_warc_fixture(spark: SparkSession, sf_dir: str) -> str:
     from history_collector_spark.sources.warc import write_warc
 
-    out = _fixture_dir(sf_dir, "htmlwarc2")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_htmlwarc_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -145,8 +142,6 @@ def _write_html_warc_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 

@@ -19,18 +19,17 @@ data pipeline, driver-checked end-to-end.
   in tests (PartitionFilters, not a post-scan filter); the oracle is a
   plain WHERE lang = .. over `documents`.
 
-Scale notes: both fixtures are per-(sf_dir) cached in a deterministic
-temp location so repeated driver runs don't re-write; the write path
-itself is the distributed `df.write` (one task per shuffle partition,
-no driver materialization). Reading JSONL with an explicit schema and
-PERMISSIVE corrupt capture is scan-parallel; the corrupt column prunes
-away when unselected.
+Scale notes: every fixture is built once per (session, corpus) by a
+``scratch.per_session`` builder, and ``spark.stop()`` deletes it. The
+write path itself is the distributed `df.write` (one task per shuffle
+partition, no driver materialization). Reading JSONL with an explicit
+schema and PERMISSIVE corrupt capture is scan-parallel; the corrupt
+column prunes away when unselected.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +38,7 @@ from pyspark.sql import types as T
 from history_collector_spark.catalog import spread, table
 from history_collector_spark.functions.nlp import md5_hash32
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import per_session, scratch_dir
 
 _DOC_SCHEMA = T.StructType(
     [
@@ -54,16 +54,11 @@ _DOC_SCHEMA = T.StructType(
 _N_BAD = 3  # corrupt fixture lines injected per corpus
 
 
-def _fixture_dir(sf_dir: str, kind: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return os.path.join(tempfile.gettempdir(), f"hc_{kind}_{tag}")
-
-
+@per_session
 def _write_jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "jsonl")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
+    """``good``: the gzipped JSONL shards plus the corrupt one;
+    ``bronze``: their full PERMISSIVE parse, landed as parquet."""
+    out = scratch_dir("hc_jsonl_")
     docs = table(spark, sf_dir, "documents")
     # Distributed write: one gzip JSON shard per partition.
     docs.repartition(4, "doc_id").write.mode("overwrite").option(
@@ -77,8 +72,15 @@ def _write_jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
         f.write('"just a string"\n')
         f.write('{"doc_id": "not-a-number", "text": "x", "lang": "en", '
                 '"source": "srcbad", "n_chars": 1}\n')
-    with open(done, "w") as f:
-        f.write("ok")
+    raw = (
+        spark.read.schema(_DOC_SCHEMA)
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(os.path.join(out, "good"))
+    )
+    # The write references every field, so the parse is unpruned
+    # and the corrupt column is authoritative.
+    raw.write.mode("overwrite").parquet(os.path.join(out, "bronze"))
     return out
 
 
@@ -118,21 +120,7 @@ def corpus_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze, which is also the right 100 TB shape — JSON is parsed
     exactly once, not per query.
     """
-    src = _write_jsonl_fixture(spark, sf_dir)
-    bronze = os.path.join(src, "bronze")
-    done = os.path.join(src, "_BRONZE_DONE")
-    if not os.path.exists(done):
-        raw = (
-            spark.read.schema(_DOC_SCHEMA)
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(os.path.join(src, "good"))
-        )
-        # The write references every field, so the parse is unpruned
-        # and the corrupt column is authoritative.
-        raw.write.mode("overwrite").parquet(bronze)
-        with open(done, "w") as f:
-            f.write("ok")
+    bronze = os.path.join(_write_jsonl_fixture(spark, sf_dir), "bronze")
     labeled = spark.read.parquet(bronze).select(
         F.when(F.col("_corrupt_record").isNotNull(), F.lit("__corrupt__"))
         .otherwise(F.col("source"))
@@ -149,14 +137,12 @@ def corpus_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@per_session
 def _write_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Two parquet vintages of the same logical table: v1 (doc_id %
     2 = 0) without the quality column, v2 (doc_id % 2 = 1) WITH it —
     the schema drift every long-lived corpus accumulates."""
-    out = _fixture_dir(sf_dir, "schevo")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
+    out = scratch_dir("hc_schevo_")
     docs = table(spark, sf_dir, "documents").select("doc_id", "source")
     docs.filter(F.col("doc_id") % 2 == 0).write.mode("overwrite").parquet(
         os.path.join(out, "data", "vintage=v1")
@@ -164,8 +150,6 @@ def _write_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     docs.filter(F.col("doc_id") % 2 == 1).withColumn(
         "quality", (F.col("doc_id") % 100) / F.lit(100.0)
     ).write.mode("overwrite").parquet(os.path.join(out, "data", "vintage=v2"))
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -204,6 +188,16 @@ def schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@per_session
+def _write_lang_parts(spark: SparkSession, sf_dir: str) -> str:
+    """``documents`` landed lang-partitioned under ``parquet``."""
+    out = scratch_dir("hc_parts_")
+    table(spark, sf_dir, "documents").write.mode("overwrite").partitionBy(
+        "lang"
+    ).parquet(os.path.join(out, "parquet"))
+    return out
+
+
 @register(
     "sink_partitioned_roundtrip",
     oracle="""
@@ -218,16 +212,9 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (PartitionFilters in the scan), so a 100 TB corpus read for one
     language lists one partition's files and scans nothing else.
     """
-    out = _fixture_dir(sf_dir, "parts")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if not os.path.exists(done):
-        docs = table(spark, sf_dir, "documents")
-        docs.write.mode("overwrite").partitionBy("lang").parquet(
-            os.path.join(out, "parquet")
-        )
-        with open(done, "w") as f:
-            f.write("ok")
-    back = spark.read.parquet(os.path.join(out, "parquet"))
+    back = spark.read.parquet(
+        os.path.join(_write_lang_parts(spark, sf_dir), "parquet")
+    )
     return back.filter(F.col("lang") == "de").select(
         "doc_id", "text", "source", "n_chars", "lang"
     )
@@ -304,11 +291,8 @@ def merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_totalprice"
         ),
     )
-    out = os.path.join(
-        _fixture_dir(sf_dir, "merge"),
-        spark.sparkContext.applicationId,
-    )
-    merged.write.mode("overwrite").parquet(out)
+    out = os.path.join(scratch_dir("hc_merge_"), "merged")
+    merged.write.parquet(out)
     return spark.read.parquet(out)
 
 
@@ -320,11 +304,9 @@ def merge_upsert_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@per_session
 def _write_multiformat_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "multifmt")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
+    out = scratch_dir("hc_multifmt_")
     docs = table(spark, sf_dir, "documents")
     docs.repartition(4, "doc_id").write.mode("overwrite").orc(
         os.path.join(out, "orc")
@@ -336,8 +318,6 @@ def _write_multiformat_fixture(spark: SparkSession, sf_dir: str) -> str:
     ).option("header", "true").option("quoteAll", "true").option(
         "escape", '"'
     ).csv(os.path.join(out, "csv"))
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -403,12 +383,10 @@ def corpus_multiformat_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@per_session
 def _write_dpo_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "dpo")
-    done = os.path.join(out, "_FIXTURE_DONE")
+    out = scratch_dir("hc_dpo_")
     tbl = os.path.join(out, "tbl")
-    if os.path.exists(done):
-        return tbl
     docs = table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(tbl)
     # the backfill: rewrite ONLY lang=de with the even-doc_id subset,
@@ -424,9 +402,7 @@ def _write_dpo_fixture(spark: SparkSession, sf_dir: str) -> str:
         )
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
-    with open(done, "w") as f:
-        f.write("ok")
-    return tbl
+    return out
 
 
 @register(
@@ -452,7 +428,7 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
     Scale shape: both writes are distributed partitioned writes; the
     readback aggregate is bounded-key. Fixture memoized per sf_dir.
     """
-    tbl = _write_dpo_fixture(spark, sf_dir)
+    tbl = os.path.join(_write_dpo_fixture(spark, sf_dir), "tbl")
     return (
         spark.read.parquet(tbl)
         .groupBy("lang")
@@ -461,6 +437,27 @@ def sink_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFr
             F.sum("doc_id").alias("sum_doc_id"),
         )
     )
+
+
+@per_session
+def _write_tier_dim(spark: SparkSession, sf_dir: str) -> str:
+    """The (lang, tier) dim under ``dim``: tiers derive from md5(lang)."""
+    out = scratch_dir("hc_tierdim_")
+    tier = F.when(
+        F.conv(F.substring(F.md5(F.col("lang")), 1, 8), 16, 10)
+        .cast("long") % 2
+        == 0,
+        "hot",
+    ).otherwise("cold")
+    (
+        table(spark, sf_dir, "documents")
+        .select("lang")
+        .distinct()
+        .select("lang", tier.alias("tier"))
+        .write.mode("overwrite")
+        .parquet(os.path.join(out, "dim"))
+    )
+    return out
 
 
 @register(
@@ -502,37 +499,12 @@ def sink_dpp_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     (python/adapters); partition-pruned serving layouts are the
     extension tier.
     """
-    out = _fixture_dir(sf_dir, "parts")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if not os.path.exists(done):
-        docs = table(spark, sf_dir, "documents")
-        docs.write.mode("overwrite").partitionBy("lang").parquet(
-            os.path.join(out, "parquet")
-        )
-        with open(done, "w") as f:
-            f.write("ok")
-    dim_done = os.path.join(out, "_DIM_DONE")
-    if not os.path.exists(dim_done):
-        tier = F.when(
-            F.conv(F.substring(F.md5(F.col("lang")), 1, 8), 16, 10)
-            .cast("long") % 2
-            == 0,
-            "hot",
-        ).otherwise("cold")
-        (
-            table(spark, sf_dir, "documents")
-            .select("lang")
-            .distinct()
-            .select("lang", tier.alias("tier"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out, "dim"))
-        )
-        with open(dim_done, "w") as f:
-            f.write("ok")
-    fact = spark.read.parquet(os.path.join(out, "parquet"))
-    dim = spark.read.parquet(os.path.join(out, "dim")).filter(
-        F.col("tier") == "hot"
+    fact = spark.read.parquet(
+        os.path.join(_write_lang_parts(spark, sf_dir), "parquet")
     )
+    dim = spark.read.parquet(
+        os.path.join(_write_tier_dim(spark, sf_dir), "dim")
+    ).filter(F.col("tier") == "hot")
     return (
         fact.join(F.broadcast(dim), "lang")
         .groupBy("lang")
@@ -544,6 +516,16 @@ def sink_dpp_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CODECS = ("snappy", "gzip", "zstd")
+
+
+@per_session
+def _write_codec_landings(spark: SparkSession, sf_dir: str) -> str:
+    """``documents`` landed once per codec, under the codec's name."""
+    out = scratch_dir("hc_codecs_")
+    docs = table(spark, sf_dir, "documents")
+    for codec in _CODECS:
+        docs.write.option("compression", codec).parquet(os.path.join(out, codec))
+    return out
 
 
 @register(
@@ -579,8 +561,7 @@ def maintenance_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFram
     table_content_digest — 32-bit row hashes, sum/xor commutative).
     Fixtures build once per corpus.
     """
-    docs = table(spark, sf_dir, "documents")
-    out = _fixture_dir(sf_dir, "codecs")
+    out = _write_codec_landings(spark, sf_dir)
     rh = md5_hash32(
         F.concat_ws(
             "|",
@@ -593,15 +574,7 @@ def maintenance_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFram
     )
     parts = []
     for codec in _CODECS:
-        path = os.path.join(out, codec)
-        done = os.path.join(out, f"_DONE_{codec}")
-        if not os.path.exists(done):
-            docs.write.mode("overwrite").option("compression", codec).parquet(
-                path
-            )
-            with open(done, "w") as f:
-                f.write("ok")
-        back = spark.read.parquet(path)
+        back = spark.read.parquet(os.path.join(out, codec))
         parts.append(
             back.select(rh.alias("rh")).agg(
                 F.count("*").alias("n_rows"),
@@ -626,14 +599,11 @@ def maintenance_compression_codecs(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 
 
+@per_session
 def _write_warc_fixture(spark: SparkSession, sf_dir: str) -> str:
     from history_collector_spark.sources.warc import write_warc
 
-    out = _fixture_dir(sf_dir, "warc")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_warc_")
 
     # distributed archiver (round 13): each shard group builds and
     # writes its own .warc(.gz) inside its task — `documents` never
@@ -682,8 +652,6 @@ def _write_warc_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -769,14 +737,11 @@ def corpus_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@per_session
 def _write_tar_fixture(spark: SparkSession, sf_dir: str) -> str:
     from history_collector_spark.sources.tarball import write_tar
 
-    out = _fixture_dir(sf_dir, "tar")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_tar_")
 
     # distributed archiver (round 13) — same per-shard task emit as
     # the WARC/codec writers; no driver materialization
@@ -806,8 +771,6 @@ def _write_tar_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -964,11 +927,7 @@ def _write_codec_shards(
     Shard COUNT scales with the corpus (the html-fixture lesson:
     pinned shard counts hide a 10x-work-per-task cliff at 10x data).
     """
-    out = _fixture_dir(sf_dir, kind)
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir(f"hc_{kind}_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -1010,8 +969,6 @@ def _write_codec_shards(
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -1027,6 +984,7 @@ def _half_cut(blob: bytes) -> bytes:
     return blob[: len(blob) // 2]
 
 
+@per_session
 def _write_lz4_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "lz4jsonl", "lz4", _lz4_encode, _half_cut
@@ -1151,6 +1109,7 @@ def _snappy_tear(blob: bytes) -> bytes:
     return blob[:cut]
 
 
+@per_session
 def _write_snappy_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "snappyjsonl", "snappy", _snappy_encode, _snappy_tear
@@ -1273,6 +1232,7 @@ def _zstd_tear(blob: bytes) -> bytes:
     return blob[:cut]
 
 
+@per_session
 def _write_zstd_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "zstdjsonl", "zst", _zstd_encode, _zstd_tear
@@ -1397,6 +1357,7 @@ def _bzip2_tear(blob: bytes) -> bytes:
     return blob[:cut]
 
 
+@per_session
 def _write_bzip2_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "bz2jsonl", "bz2", _bzip2_encode, _bzip2_tear
@@ -1575,12 +1536,9 @@ def _zstd_compress_with_dict(data: bytes, dict_bytes: bytes) -> bytes:
         lib.ZSTD_freeCCtx(cctx)
 
 
+@per_session
 def _write_zstd_dict_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "zstddict")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_zstddict_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -1638,8 +1596,6 @@ def _write_zstd_dict_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -1908,6 +1864,7 @@ def _zip_tear(blob: bytes) -> bytes:
     return blob[:cut]
 
 
+@per_session
 def _write_zip_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "zipjsonl", "zip", _zip_encode, _zip_tear
@@ -2031,6 +1988,7 @@ def _xz_tear(blob: bytes) -> bytes:
     return blob[:cut]
 
 
+@per_session
 def _write_xz_fixture(spark: SparkSession, sf_dir: str) -> str:
     return _write_codec_shards(
         spark, sf_dir, "xzjsonl", "xz", _xz_encode, _xz_tear
@@ -2133,17 +2091,14 @@ def corpus_xz_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+@per_session
 def _write_warc_http_fixture(spark: SparkSession, sf_dir: str) -> str:
     from history_collector_spark.sources.http_msg import (
         write_http_response,
     )
     from history_collector_spark.sources.warc import write_warc
 
-    out = _fixture_dir(sf_dir, "warchttp")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_warchttp_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -2193,8 +2148,6 @@ def _write_warc_http_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -2296,12 +2249,9 @@ def corpus_warc_http_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQRAW_CODECS = ("SNAPPY", "ZSTD", "GZIP", "NONE", "SELF")
 
 
+@per_session
 def _write_parquet_raw_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "pqraw2")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_pqraw_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -2374,8 +2324,6 @@ def _write_parquet_raw_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 
@@ -2485,12 +2433,9 @@ def corpus_parquet_raw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ORC_CODECS = ("snappy", "zstd", "zlib", "lz4", "uncompressed", "SELF")
 
 
+@per_session
 def _write_orc_raw_fixture(spark: SparkSession, sf_dir: str) -> str:
-    out = _fixture_dir(sf_dir, "orcraw2")
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_orcraw_")
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -2560,8 +2505,6 @@ def _write_orc_raw_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 

@@ -45,7 +45,8 @@ from pyspark.sql.types import (
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
-from history_collector_spark.streaming.replay import per_session, write_replay_files
+from history_collector_spark.scratch import per_session
+from history_collector_spark.streaming.replay import write_replay_files
 from history_collector_spark.streaming.conf import (
     drain_to_memory,
     python_state_partitions,

@@ -22,14 +22,16 @@ in for Postgres (same dialect path Spark uses for any JDBC url).
 
 from __future__ import annotations
 
+import glob
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import per_session, scratch_dir
 from history_collector_spark.sinks.jdbc import JdbcDualSink, committed_view
 from history_collector_spark.streaming.conf import run_once
 
@@ -39,42 +41,35 @@ _N_FILES = 3
 _DERBY_PROPS = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
 
 
-def _fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Landing dir of typed rows (3 parquet files = 3 micro-batches)
-    and a Derby url unique to this (session, corpus)."""
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    base = os.path.join(tempfile.gettempdir(), f"hc_jdbc_{app}_{tag}")
+@per_session
+def _fixture(spark: SparkSession, sf_dir: str) -> str:
+    """Base dir of this (session, corpus): ``flat`` holds the typed rows
+    (3 parquet files = 3 micro-batches), ``db`` the Derby database."""
+    base = scratch_dir("hc_jdbc_")
     landing = os.path.join(base, "landing")
-    if not os.path.exists(os.path.join(base, "_FIXTURE_DONE")):
-        rows = (
-            table(spark, sf_dir, "orders")
-            .filter(F.col("o_orderkey") < _SLICE)
-            .select(
-                F.when(F.col("o_orderkey") % 3 == 0, "creation")
-                .otherwise("payment")
-                .alias("type"),
-                F.col("o_custkey").alias("source"),
-                (F.col("o_orderkey") % 1000).cast("long").alias("amount"),
-                (F.col("o_orderkey") % _N_FILES).alias("file_no"),
-            )
+    rows = (
+        table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") < _SLICE)
+        .select(
+            F.when(F.col("o_orderkey") % 3 == 0, "creation")
+            .otherwise("payment")
+            .alias("type"),
+            F.col("o_custkey").alias("source"),
+            (F.col("o_orderkey") % 1000).cast("long").alias("amount"),
+            (F.col("o_orderkey") % _N_FILES).alias("file_no"),
         )
-        for g in range(_N_FILES):
-            rows.filter(F.col("file_no") == g).drop("file_no").coalesce(
-                1
-            ).write.mode("overwrite").parquet(os.path.join(landing, f"g{g}"))
-        # flatten: the file stream wants one directory of files
-        flat = os.path.join(base, "flat")
-        os.makedirs(flat, exist_ok=True)
-        import glob
-        import shutil
-
-        for g in range(_N_FILES):
-            for f in glob.glob(os.path.join(landing, f"g{g}", "part-*.parquet")):
-                shutil.copy(f, os.path.join(flat, f"g{g}.parquet"))
-        with open(os.path.join(base, "_FIXTURE_DONE"), "w") as fh:
-            fh.write("ok")
-    return os.path.join(base, "flat"), f"jdbc:derby:{base}/db;create=true"
+    )
+    for g in range(_N_FILES):
+        rows.filter(F.col("file_no") == g).drop("file_no").coalesce(
+            1
+        ).write.mode("overwrite").parquet(os.path.join(landing, f"g{g}"))
+    # flatten: the file stream wants one directory of files
+    flat = os.path.join(base, "flat")
+    os.makedirs(flat)
+    for g in range(_N_FILES):
+        for f in glob.glob(os.path.join(landing, f"g{g}", "part-*.parquet")):
+            shutil.copy(f, os.path.join(flat, f"g{g}.parquet"))
+    return base
 
 
 @register(
@@ -92,7 +87,8 @@ def _fixture(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """,
 )
 def streaming_jdbc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    flat, url = _fixture(spark, sf_dir)
+    base = _fixture(spark, sf_dir)
+    url = f"jdbc:derby:{base}/db;create=true"
     sink = JdbcDualSink(url, properties=_DERBY_PROPS)
     sink.ensure_tables(spark)
 
@@ -100,7 +96,7 @@ def streaming_jdbc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(flat)
+        .parquet(os.path.join(base, "flat"))
     )
     run_once(stream.writeStream.foreachBatch(sink))
 

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,40 +24,37 @@ from pyspark.sql import functions as F
 from history_collector_spark.catalog import table
 from history_collector_spark.functions.layout import compact, write_range_layout
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import per_session, scratch_dir
 
 _FRAG_FILES = 16
 _TARGET_FILES = 4
-
-_MAINT_CACHE: dict[tuple[str, str], tuple[str, str, str]] = {}
 
 
 def _n_parquet_files(path: str) -> int:
     return len(glob.glob(os.path.join(path, "part-*.parquet")))
 
 
-def maintenance_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """(fragmented, compacted, range_clustered) dirs, built once per
-    (session, corpus). Driver-side work is one file listing per stage
-    — at production scale that listing belongs to the table format's
-    metadata layer, not the driver; the REWRITES themselves are fully
-    distributed (shuffle-repartitioned, not coalesced)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MAINT_CACHE.get(key)
-    if cached is not None and all(os.path.isdir(p) for p in cached):
-        return cached
+@per_session
+def maintenance_dirs(spark: SparkSession, sf_dir: str) -> str:
+    """Base dir holding the ``frag``, ``compacted`` and ``ranged``
+    stages, built once per (session, corpus). Driver-side work is one
+    file listing per stage — at production scale that listing belongs
+    to the table format's metadata layer, not the driver; the REWRITES
+    themselves are fully distributed (shuffle-repartitioned, not
+    coalesced)."""
     docs = table(spark, sf_dir, "documents")
     n = docs.count()
-    frag = os.path.join(tempfile.mkdtemp(prefix="hc_maint_"), "frag")
+    base = scratch_dir("hc_maint_")
+    frag = os.path.join(base, "frag")
     docs.repartition(_FRAG_FILES).write.mode("overwrite").parquet(frag)
-    compacted = os.path.join(os.path.dirname(frag), "compacted")
+    compacted = os.path.join(base, "compacted")
     # target sized so compaction lands exactly _TARGET_FILES even files
     compact(spark, frag, compacted, target_rows_per_file=-(-n // _TARGET_FILES))
-    ranged = os.path.join(os.path.dirname(frag), "ranged")
+    ranged = os.path.join(base, "ranged")
     write_range_layout(
         spark.read.parquet(compacted), ranged, ["doc_id"], _TARGET_FILES
     )
-    _MAINT_CACHE[key] = (frag, compacted, ranged)
-    return _MAINT_CACHE[key]
+    return base
 
 
 @register(
@@ -80,14 +76,14 @@ def maintenance_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     verified per stage (row preservation is the invariant that makes
     a rewrite safe to run unattended; the pinned file counts verify
     the rewrite actually resized the layout)."""
-    frag, compacted, ranged = maintenance_dirs(spark, sf_dir)
+    base = maintenance_dirs(spark, sf_dir)
     rows = [
-        ("fragmented", _n_parquet_files(frag),
-         spark.read.parquet(frag).count()),
-        ("compacted", _n_parquet_files(compacted),
-         spark.read.parquet(compacted).count()),
-        ("range_clustered", _n_parquet_files(ranged),
-         spark.read.parquet(ranged).count()),
+        (stage, _n_parquet_files(path), spark.read.parquet(path).count())
+        for stage, path in (
+            ("fragmented", os.path.join(base, "frag")),
+            ("compacted", os.path.join(base, "compacted")),
+            ("range_clustered", os.path.join(base, "ranged")),
+        )
     ]
     return spark.createDataFrame(
         rows, "stage string, n_files long, n_rows long"
@@ -112,18 +108,9 @@ _RG_SHARDS = 4     # key-sharded files (sorted within each)
 _RG_PROBES = 8     # key-range probes evaluated against the stats
 
 
+@per_session
 def _write_rowgroup_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"hc_rgprune_{os.path.basename(os.path.normpath(sf_dir))}",
-    )
-    done = os.path.join(out, "_FIXTURE_DONE")
-    if os.path.exists(done):
-        return out
-    os.makedirs(out, exist_ok=True)
+    out = scratch_dir("hc_rgprune_")
 
     def _emit(key, pdf):
         import pandas as pd
@@ -151,8 +138,6 @@ def _write_rowgroup_fixture(spark: SparkSession, sf_dir: str) -> str:
         .applyInPandas(_emit, "shard bigint, n bigint")
         .collect()  # tiny: one row per shard
     )
-    with open(done, "w") as f:
-        f.write("ok")
     return out
 
 

@@ -25,6 +25,7 @@ from history_collector_spark.catalog import spread, table
 from history_collector_spark.functions.nlp import cosine, l2_norm
 from history_collector_spark.registry import register
 from history_collector_spark.pinning import pin_local
+from history_collector_spark.scratch import scratch_dir
 
 EMB_DIM = 64
 
@@ -284,7 +285,6 @@ def ivf_bucketed_index(spark: SparkSession, sf_dir: str) -> str:
     100 TB this is the layout an ANN service maintains: probes join
     bucket-to-bucket, index scans never exchange."""
     import os
-    import tempfile
     import uuid
 
     key = (spark.sparkContext.applicationId, sf_dir)
@@ -297,7 +297,7 @@ def ivf_bucketed_index(spark: SparkSession, sf_dir: str) -> str:
         .repartition(_IVF_BUCKETS, "label")
         .write.bucketBy(_IVF_BUCKETS, "label")
         .sortBy("label")
-        .option("path", os.path.join(tempfile.mkdtemp(prefix="hc_ivf_"), "ix"))
+        .option("path", os.path.join(scratch_dir("hc_ivf_"), "ix"))
         .saveAsTable(tab)
     )
     _IVF_INDEX_CACHE[key] = tab

@@ -22,13 +22,13 @@ production ingest uses the exactly-once foreachBatch sink
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import events_ts, table
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import scratch_dir
 from history_collector_spark.streaming.conf import drain_to_memory
 from history_collector_spark.sources.xdr import (
     LEDGERS_PER_FILE,
@@ -82,7 +82,7 @@ def _write_archive_from_orders(spark: SparkSession, sf_dir: str) -> str:
                 "operations": [],
             }
         )
-    landing = tempfile.mkdtemp(prefix="hc_ingest_")
+    landing = scratch_dir("hc_ingest_")
     n_files = _SLICE // LEDGERS_PER_FILE // LEDGERS_PER_FILE + 1
     for g in range(n_files):
         entries = [

@@ -16,13 +16,13 @@ oracle can re-marshal XDR bytes.
 from __future__ import annotations
 
 import hashlib
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import scratch_dir
 from history_collector_spark.sources import xdr_codec as xc
 from history_collector_spark.sources.xdr import (
     read_archive,
@@ -92,7 +92,7 @@ def _write_triplet(spark: SparkSession, sf_dir: str) -> str:
         tx_recs.append(xc.build_transaction_entry(ledger, envs))
         res_recs.append(xc.build_result_entry(ledger, results))
 
-    d = tempfile.mkdtemp(prefix="hc_xdr_triplet_")
+    d = scratch_dir("hc_xdr_triplet_")
     write_xdr_archive_file(d, "transactions", "0000003f", tx_recs)
     write_xdr_archive_file(d, "ledger", "0000003f", led_recs)
     write_xdr_archive_file(d, "results", "0000003f", res_recs)

@@ -27,19 +27,19 @@ streams track in parallel.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from history_collector_spark.catalog import table
 from history_collector_spark.registry import register
+from history_collector_spark.scratch import per_session, scratch_dir
 from history_collector_spark.streaming.conf import (
     drain_to_memory,
     python_state_partitions,
     run_once,
 )
-from history_collector_spark.streaming.replay import per_session, write_replay_files
+from history_collector_spark.streaming.replay import write_replay_files
 from history_collector_spark.streaming.stateful import (
     MG_CAPACITY,
     track_ewma,
@@ -207,7 +207,7 @@ def streaming_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy("user_id").agg(
         F.count("*").alias("n_events"), F.sum("value").alias("total_value")
     )
-    out_dir = tempfile.mkdtemp(prefix="hc_upsert_")
+    out_dir = scratch_dir("hc_upsert_")
 
     def upsert_batch(batch_df, epoch_id: int) -> None:
         # the delta: only keys changed in this epoch arrive here
@@ -596,7 +596,7 @@ def streaming_scd2_cdc_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(flat)
     )
-    out_dir = tempfile.mkdtemp(prefix="hc_scd2_")
+    out_dir = scratch_dir("hc_scd2_")
 
     def current_changes(batch_spark, users_df):
         """Recover the touched keys' accumulated CHANGE LIST from the

@@ -5,40 +5,21 @@ by materializing it into N parquet files with strictly increasing
 pinned mtimes (the file source orders batches by modification time)
 and reading them back with ``maxFilesPerTrigger=1``.
 
-The files live under the session's ``SparkFiles`` root, a per-application
-dir that Spark deletes on ``spark.stop()``. ``per_session`` memoizes a
-fixture builder, so the consumers of one feed build it once per session
-and nothing outlives the session.
+The files live in ``scratch.scratch_dir``s, which ``spark.stop()``
+deletes; the consumers of one feed memoize its builder with
+``scratch.per_session``, so they build it once per session.
 """
 
 from __future__ import annotations
 
-import functools
 import glob
 import os
 import shutil
-import tempfile
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
-from pyspark import SparkFiles
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-# (applicationId, builder, *args) -> flat dir
-_memo: dict[tuple, str] = {}
-
-
-def per_session(build: Callable[..., str]) -> Callable[..., str]:
-    """Memoize ``build(spark, *args) -> dir`` per (session, builder, args).
-    A new session builds its own; a dir that has gone is rebuilt."""
-
-    @functools.wraps(build)
-    def cached(spark: SparkSession, *args) -> str:
-        key = (spark.sparkContext.applicationId, build, *args)
-        if key not in _memo or not os.path.isdir(_memo[key]):
-            _memo[key] = build(spark, *args)
-        return _memo[key]
-
-    return cached
+from history_collector_spark.scratch import scratch_dir
 
 
 def write_replay_files(
@@ -50,9 +31,8 @@ def write_replay_files(
 ) -> str:
     """Materialize ``feed`` as at most one parquet file per
     ``bucket_col`` value, named in bucket order with strictly
-    increasing pinned mtimes, and return the flat directory. It lives
-    under the session's ``SparkFiles`` root, so ``spark.stop()`` deletes
-    it if no caller does.
+    increasing pinned mtimes, and return the flat directory (a
+    ``scratch_dir``, so ``spark.stop()`` deletes it if no caller does).
 
     ONE Spark job: hash-repartition on the bucket column into
     ``n_files`` partitions (every bucket's rows land in exactly one
@@ -65,9 +45,8 @@ def write_replay_files(
     has one fewer micro-batch, which no consumer's equality contract
     depends on (state still crosses every remaining boundary).
     """
-    root = SparkFiles.getRootDirectory()
-    landing = tempfile.mkdtemp(prefix=prefix, dir=root)
-    flat = tempfile.mkdtemp(prefix=prefix + "flat_", dir=root)
+    landing = scratch_dir(prefix)
+    flat = scratch_dir(prefix + "flat_")
     (
         feed.repartition(n_files, bucket_col)
         .select(*cols, bucket_col)

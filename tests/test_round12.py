@@ -93,18 +93,10 @@ def test_snappy_fixture_torn_shard_always_raises(spark, tmp_path):
         SnappyDecodeError,
         decode_snappy_frame,
     )
-    from history_collector_spark.queries.corpus_io import (
-        _fixture_dir,
-        _write_snappy_fixture,
-    )
+    from history_collector_spark.queries.corpus_io import _write_snappy_fixture
 
-    # force a rebuild so the test exercises the fixed writer, not a
-    # fixture cached in /tmp by an earlier run of the old code
-    import shutil
-
-    stale = _fixture_dir("/root/testdata/sf0.001", "snappyjsonl")
-    shutil.rmtree(stale, ignore_errors=True)
-    out = _write_snappy_fixture(spark, "/root/testdata/sf0.001")
+    # a fresh build, not one memoized by an earlier query in the session
+    out = _write_snappy_fixture.__wrapped__(spark, "/root/testdata/sf0.001")
     torn = [f for f in sorted(os.listdir(out)) if f.endswith(".snappy")][0]
     assert torn == "docs000.jsonl.snappy"
     blob = open(os.path.join(out, torn), "rb").read()
@@ -328,20 +320,13 @@ def test_zstd_guards():
 
 
 def test_zstd_fixture_torn_shard_always_raises(spark):
-    import shutil
-
     from history_collector_spark.functions.zstd import (
         ZstdDecodeError,
         decompress,
     )
-    from history_collector_spark.queries.corpus_io import (
-        _fixture_dir,
-        _write_zstd_fixture,
-    )
+    from history_collector_spark.queries.corpus_io import _write_zstd_fixture
 
-    stale = _fixture_dir("/root/testdata/sf0.001", "zstdjsonl")
-    shutil.rmtree(stale, ignore_errors=True)
-    out = _write_zstd_fixture(spark, "/root/testdata/sf0.001")
+    out = _write_zstd_fixture.__wrapped__(spark, "/root/testdata/sf0.001")
     blob = open(os.path.join(out, "docs000.jsonl.zst"), "rb").read()
     with pytest.raises(ZstdDecodeError):
         decompress(blob)

@@ -70,7 +70,9 @@ def _run_tracker(make, batches):
     for b in batches:
         for out in make(tuple(["shard0"]), iter([b]), st):
             rows.append(out)
-    return pd.concat(rows, ignore_index=True)
+    # one dtype for every frame: an all-None z column (the first batch's)
+    # would otherwise make pandas warn about how it picks result dtypes
+    return pd.concat([r.astype(object) for r in rows], ignore_index=True)
 
 
 def test_shard_ewma_matches_per_user_recursion():

@@ -402,7 +402,7 @@ def test_range_layout_files_non_overlapping(spark):
 
     from history_collector_spark.queries.maintenance import maintenance_dirs
 
-    _, _, ranged = maintenance_dirs(spark, TEST_SF_DIR)
+    ranged = os.path.join(maintenance_dirs(spark, TEST_SF_DIR), "ranged")
     spans = []
     for f in glob.glob(f"{ranged}/part-*.parquet"):
         row = (

@@ -286,17 +286,17 @@ def test_drain_leaves_nothing_behind(spark, odd_shuffle_partitions, name):
     assert _drain_checkpoints() == ckpts
 
 
-# Runs the z-score e2e twice in a session made for the test, then stops
-# that session. Prints the replay fixture dirs and what is left of them.
+# Runs the z-score e2e twice in a session made for the test, then a
+# memoized corpus fixture and two per-call scratch writers, then stops
+# that session. Prints the memoized dirs and what is left of them.
 _REPLAY_LIFETIME_PROBE = textwrap.dedent(
     """
     import glob, json, os, sys, tempfile
     root, sf_dir = sys.argv[1:3]
     sys.path.insert(0, root)
     from pyspark import SparkFiles
-    from history_collector_spark import registry
+    from history_collector_spark import registry, scratch
     from history_collector_spark.session import get_spark
-    from history_collector_spark.streaming import replay
 
     def tmp_fixtures():
         return glob.glob(os.path.join(tempfile.gettempdir(), "hc_*"))
@@ -306,17 +306,25 @@ _REPLAY_LIFETIME_PROBE = textwrap.dedent(
     registry.load_all()
     run = registry.QUERIES["streaming_zscore_e2e"]
     rows = len(run(spark, sf_dir).collect())
-    first = sorted(replay._memo.values())
+    first = sorted(scratch._memo.values())
     assert rows == len(run(spark, sf_dir).collect())
     out = {
         "rows": rows,
         "dirs": first,
-        "warm_dirs": sorted(replay._memo.values()),
-        "files_root": SparkFiles.getRootDirectory(),
-        "existed": [os.path.isdir(d) for d in first],
+        "warm_dirs": sorted(scratch._memo.values()),
     }
+    for name in (
+        "corpus_lz4_ingest", "streaming_upsert_e2e", "xdr_triplet_parity"
+    ):
+        assert registry.QUERIES[name](spark, sf_dir).collect(), name
+    every = sorted(scratch._memo.values())
+    out.update(
+        all_dirs=every,
+        files_root=SparkFiles.getRootDirectory(),
+        existed=[os.path.isdir(d) for d in every],
+    )
     spark.stop()
-    out["left"] = [d for d in first if os.path.exists(d)]
+    out["left"] = [d for d in every if os.path.exists(d)]
     out["new_tmp"] = sorted(set(tmp_fixtures()) - set(tmp_before))
     print(json.dumps(out))
     """
@@ -324,8 +332,9 @@ _REPLAY_LIFETIME_PROBE = textwrap.dedent(
 
 
 def test_replay_fixtures_end_with_their_session(tmp_path):
-    """The memoized replay feed is built once per session, under the
-    session's SparkFiles root, and ``spark.stop()`` deletes it."""
+    """The memoized replay feed is built once per session. It and every
+    other scratch dir, memoized or per call, live under the session's
+    SparkFiles root, and ``spark.stop()`` deletes them."""
     import json
 
     from tests.conftest import TEST_SF_DIR
@@ -343,11 +352,14 @@ def test_replay_fixtures_end_with_their_session(tmp_path):
     assert res.returncode == 0, res.stderr[-3000:]
     out = json.loads(res.stdout.splitlines()[-1])
     assert out["rows"] > 0
-    assert len(out["dirs"]) == 1 and out["existed"] == [True]
+    assert len(out["dirs"]) == 1
     assert out["warm_dirs"] == out["dirs"]  # the warm run reused the feed
-    assert out["dirs"][0].startswith(out["files_root"] + os.sep)
-    assert out["left"] == []
     assert out["new_tmp"] == []
+    assert len(out["all_dirs"]) > 1  # the corpus fixture was memoized too
+    assert all(out["existed"])
+    for d in out["all_dirs"]:
+        assert d.startswith(out["files_root"] + os.sep)
+    assert out["left"] == []
 
 
 def test_run_once_cleans_up_after_failing_batch(
